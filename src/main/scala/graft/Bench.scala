@@ -45,17 +45,15 @@ object Bench {
         val t0 = System.nanoTime()
         // noop sink executes the FULL plan (orderBy, projections) —
         // count() would let Spark skip work that can't change row counts
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          }
+        name -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
       }
     }
-    val results = queries.keys.map { name =>
-      val ts = samples.map(_(name)).sorted
-      name -> ts(Passes / 2)
-    }.toMap
+    val (results, failed) = medians(samples)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // candidate-pair count next to the timings (VERDICT r8 #5): the
     // multiprobe entry's cost driver as deterministic DATA, so a scale
@@ -66,8 +64,9 @@ object Bench {
         System.err.println(s"[bench] mp_pairs failed: $e"); -1L }
     def json(rs: Iterable[(String, Double)]): String = rs
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"mp_pairs":$mpPairs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"mp_pairs":$mpPairs,"sf":"$sfDir","failed":$failedJson}"""
     // The driver's round artifact keeps only the LAST ~2000 chars of
     // stdout, so a 148-entry queries map on the final line arrives
     // truncated and unparseable (VERDICT r12 #7). Three outputs:
@@ -97,5 +96,20 @@ object Bench {
       .map { case (k, v) => k -> math.rint(v * 1000) / 1000 }
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(slowest)},"n_queries":${results.size},"queries_full":"BENCH_FULL.json","mp_pairs":$mpPairs,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Per-query median over passes (`None` = the pass threw), and the
+    * queries that failed in any pass. A failed query has no time — its
+    * time-to-throw would read as a fast sample — so it is listed apart,
+    * outside the medians and the total.
+    */
+  def medians(passes: Seq[Map[String, Option[Double]]])
+      : (Map[String, Double], Seq[String]) = {
+    val names = passes.flatMap(_.keys).distinct
+    val failed = names.filter(n => passes.exists(_(n).isEmpty)).sorted
+    val ok = names.filterNot(failed.contains).map { n =>
+      n -> passes.map(_(n).get).sorted.apply(passes.size / 2)
+    }.toMap
+    (ok, failed)
   }
 }

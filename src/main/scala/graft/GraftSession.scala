@@ -35,6 +35,19 @@ object GraftSession {
       // the provider every large stateful job runs in production.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // Changelog checkpointing: an epoch's commit writes the keys it
+      // changed as one small file per partition. Without it every commit
+      // flushes RocksDB, makes a checkpoint, copies the new SST files and
+      // a metadata zip into the checkpoint dir, and deletes two temp dirs
+      // with forked `rm -rf` (Spark's JavaUtils.deleteRecursively), all
+      // inside the task. A full snapshot is now taken every 10th version
+      // (stateStore.minDeltasForSnapshot) and uploaded by the state-store
+      // maintenance thread; recovery replays the changelogs written after
+      // the last uploaded snapshot. On the benchmark's stream_persist a
+      // partition commit went from ~20-30 to ~5 ms, and a run's `rm -rf`
+      // forks from 662 to 39.
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
       // The salted whale-protection stages (streaming.Jobs
       // .ContainmentGate / ClusterAssignStream) chain two append-mode
       // flatMapGroupsWithState operators: a (doc, salt)-sharded
@@ -54,6 +67,27 @@ object GraftSession {
       // converts explicitly (portable across engines).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Local files through graft.storage.LocalFs. Without libhadoop
+      // (NativeIO), stock Hadoop forks a process per file operation: a
+      // `chmod` per created file or directory and a `readlink` per
+      // getFileLinkStatus (both ends of every FileContext rename). A
+      // JFR recording of one benchmark stream_persist run (RunningCounts
+      // on RocksDB into the JDBC sink, 4 partitions) counted 6,630
+      // process starts: 4,504 readlink and 1,669 chmod from Spark's
+      // checkpoint file manager, RocksDB's snapshot upload and the
+      // executors' output streams, and 454 `rm -rf`. With these two keys
+      // the same run starts 665, 662 of them `rm -rf` from Spark's own
+      // JavaUtils.deleteRecursively (two per RocksDB commit), which no
+      // file-system key reaches; with changelog checkpointing (above) it
+      // starts 42.
+      // `fs.file.impl` serves FileSystem users (parquet writes, the
+      // stores, RocksDB); the AbstractFileSystem key serves FileContext
+      // (streaming offset/commit logs, state checkpoints).
+      // tools/jfr_forks.py counts the forks of a recorded run.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.storage.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.storage.NioLocalFs].getName)
 
   def local(cores: Int = 4): SparkSession = {
     val s = tuned(SparkSession.builder().master(s"local[$cores]"), cores)

@@ -40,22 +40,23 @@ final case class Tables(spark: SparkSession, dir: String) {
     * audit, never on a query path.
     */
   def validateDocuments(): Unit = {
-    // null-SAFE comparison (ADVICE r21 low): with a plain ===, a NULL
-    // text made the predicate null and slipped past validation — yet
-    // downstream per-row quality/repetition projections score null
-    // text as null (explode-based forms dropped such docs entirely),
-    // so the corpus contract is text IS NOT NULL, enforced here: a
-    // null text can never satisfy n_chars <=> length(text).
+    // Corpus contract: text and n_chars are NOT NULL, and n_chars ==
+    // length(text). Downstream per-row quality/repetition projections
+    // score a null text as null, so nulls are refused explicitly: a
+    // plain comparison with a null side is null and slips past the
+    // filter (ADVICE r21 low), and a null-safe one passes a doc with
+    // both missing, as NULL <=> NULL is true (ADVICE r22 low #1).
     val bad = documents
-      .filter(!(col("n_chars") <=> length(col("text")).cast(LongType)))
+      .filter(col("text").isNull || col("n_chars").isNull ||
+        col("n_chars") =!= length(col("text")).cast(LongType))
       .select(col("doc_id"), col("n_chars"),
         length(col("text")).cast(LongType).as("len_text"))
       .head(3)
     require(bad.isEmpty,
       s"corpus at $dir violates the n_chars == length(text) convention " +
         s"(first ${bad.length} of possibly more): " +
-        bad.map(r => s"doc_id=${r.getLong(0)} n_chars=${r.getLong(1)} " +
-          s"length(text)=${r.getLong(2)}").mkString("; "))
+        bad.map(r => s"doc_id=${r.get(0)} n_chars=${r.get(1)} " +
+          s"length(text)=${r.get(2)}").mkString("; "))
     // doc_id is the corpus primary key — a re-delivered id (e.g. an
     // intake batch appending a doc that already exists) breaks every
     // per-doc aggregate AND the incremental stores' append ≡

@@ -27,6 +27,14 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("Bench: a query that fails in any pass is listed apart, not timed") {
+    val passes = Seq(
+      Map("a" -> Some(3.0), "b" -> Some(9.0)),
+      Map("a" -> Some(1.0), "b" -> None),
+      Map("a" -> Some(2.0), "b" -> Some(8.0)))
+    assert(Bench.medians(passes) == (Map("a" -> 2.0), Seq("b")))
+  }
+
   test("entry() is live and returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -52,6 +60,24 @@ class ContractSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("n_chars == length(text)") &&
       e.getMessage.contains("doc_id=7"), s"unhelpful message: ${e.getMessage}")
+  }
+
+  test("validateDocuments: a doc with NULL text and NULL n_chars fails loudly") {
+    import org.apache.spark.sql.functions._
+    // NULL <=> NULL is true: the null-safe comparison alone passes it
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-nulls-doctored").toString
+    val nulled = col("doc_id") === 7L
+    tables.documents
+      .withColumn("text", when(nulled, lit(null)).otherwise(col("text")))
+      .withColumn("n_chars", when(nulled, lit(null)).otherwise(col("n_chars")))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException] {
+      Tables(spark, dir).validateDocuments()
+    }
+    assert(e.getMessage.contains("n_chars == length(text)") &&
+      e.getMessage.contains("doc_id=7 n_chars=null"),
+      s"unhelpful message: ${e.getMessage}")
   }
 
   test("validateDocuments: a re-delivered doc_id fails loudly; the real corpus is unique") {
