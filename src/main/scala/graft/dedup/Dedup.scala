@@ -1083,7 +1083,7 @@ object Dedup {
     }
     val reapedIncRoots = Seq(ShinglesStore, Substring.WindowsStore)
       .flatMap { s =>
-        Materialize.reapStaleIncremental(t.spark, s.prefix,
+        Materialize.reapStale(t.spark, s.prefix + "_gens",
           corpora.map(c => Materialize.stableTag(c, s)).toSet)
       }
     val reapedTables = Seq(ShinglesBucketedStore, BandsBucketedStore,

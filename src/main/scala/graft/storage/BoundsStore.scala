@@ -1,6 +1,5 @@
 package graft.storage
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -16,31 +15,14 @@ import org.apache.spark.sql.functions.col
   * bucketed by one job incarnation used ONE consistent boundary table,
   * and the generation number in the path records which.
   *
-  * Layout and commit semantics are [[Generations]] (shared with
-  * [[ClusterStore]]): `<root>/gen=<n>/bounds/` parquet, committed at
-  * the `_SUCCESS` rename; current = highest committed.
+  * Layout and commit are [[Generations]]': `<root>/gen=<n>/bounds/`
+  * parquet, written into a temp dir and committed by one exclusive
+  * rename, so concurrent publishers get distinct generations; current =
+  * highest committed.
   */
-object BoundsStore {
+object BoundsStore extends GenerationStore("bounds") {
 
-  private val Artifact = "bounds"
-
-  def boundsPath(root: String, n: Long): String =
-    Generations.path(root, n, Artifact)
-
-  def committedGenerations(root: String,
-                           conf: Configuration = new Configuration()): Seq[Long] =
-    Generations.committed(root, Artifact, conf)
-
-  def currentGeneration(root: String,
-                        conf: Configuration = new Configuration()): Option[Long] =
-    Generations.current(root, Artifact, conf)
-
-  /** Write `bounds` (lang, s1, s2) as the next generation and return
-    * its number.
-    */
-  def publishGeneration(spark: SparkSession, root: String,
-                        bounds: DataFrame): Long =
-    Generations.publish(root, Artifact, bounds)
+  def boundsPath(root: String, n: Long): String = pathAt(root, n)
 
   /** Publish the current batch boundary table for `t`'s corpus. */
   def publishFrom(t: graft.Tables, root: String): Long =
@@ -49,8 +31,4 @@ object BoundsStore {
   def readBounds(spark: SparkSession, root: String, n: Long): DataFrame =
     spark.read.parquet(boundsPath(root, n))
       .select(col("lang"), col("s1"), col("s2"))
-
-  def retireOld(root: String, keep: Int = 2,
-                conf: Configuration = new Configuration()): Seq[Long] =
-    Generations.retireOld(root, Artifact, keep, conf)
 }

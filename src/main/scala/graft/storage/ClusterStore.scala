@@ -1,6 +1,5 @@
 package graft.storage
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -14,32 +13,14 @@ import org.apache.spark.sql.functions.col
   * (or roll) the intake job — readers mid-run keep the generation they
   * resolved, because generations are immutable until [[retireOld]].
   *
-  * Layout and commit semantics are [[Generations]] (shared with
-  * [[BoundsStore]]): `<root>/gen=<n>/labels/` — (doc_id, keeper_id,
-  * cluster_size) parquet, committed at the `_SUCCESS` rename; current =
-  * highest committed.
+  * Layout and commit are [[Generations]]': `<root>/gen=<n>/labels/` —
+  * (doc_id, keeper_id, cluster_size) parquet, written into a temp dir
+  * and committed by one exclusive rename, so concurrent publishers get
+  * distinct generations; current = highest committed.
   */
-object ClusterStore {
+object ClusterStore extends GenerationStore("labels") {
 
-  private val Artifact = "labels"
-
-  def labelsPath(root: String, n: Long): String =
-    Generations.path(root, n, Artifact)
-
-  def committedGenerations(root: String,
-                           conf: Configuration = new Configuration()): Seq[Long] =
-    Generations.committed(root, Artifact, conf)
-
-  def currentGeneration(root: String,
-                        conf: Configuration = new Configuration()): Option[Long] =
-    Generations.current(root, Artifact, conf)
-
-  /** Write `labels` (doc_id, keeper_id, cluster_size) as the next
-    * generation and return its number.
-    */
-  def publishGeneration(spark: SparkSession, root: String,
-                        labels: DataFrame): Long =
-    Generations.publish(root, Artifact, labels)
+  def labelsPath(root: String, n: Long): String = pathAt(root, n)
 
   /** Publish the batch `dedup_clusters` labels for `t`'s corpus — the
     * periodic recompute that merges clusters incremental assignment
@@ -82,11 +63,4 @@ object ClusterStore {
         Seq("doc_id"), "full_outer")
       .filter(!(col("keeper_old") <=> col("keeper_new")))
       .orderBy(col("doc_id"))
-
-  /** Delete all but the newest `keep` generations (run after readers
-    * drain — same contract as [[IndexMaintenance.retireOld]]).
-    */
-  def retireOld(root: String, keep: Int = 2,
-                conf: Configuration = new Configuration()): Seq[Long] =
-    Generations.retireOld(root, Artifact, keep, conf)
 }

@@ -56,107 +56,93 @@ object IndexMaintenance {
     * scaladoc promises, made concrete:
     *
     * {{{
-    *   <root>/gen=<n>/index/   cell-partitioned (vec_id, v, cid) parquet
-    *   <root>/gen=<n>/cents/   the generation's (cid, cv) quantizer
+    *   <root>/gen=<n>/index/    cell-partitioned (vec_id, v, cid) parquet
+    *   <root>/gen=<n>/cents/    the generation's (cid, cv) quantizer
+    *   <root>/gen=<n>/pqbook/   IVF-PQ: the residual codebook
+    *   <root>/gen=<n>/pqcodes/  IVF-PQ: codes under these cents and book
     * }}}
     *
-    * A generation is COMMITTED iff both `_SUCCESS` markers exist;
-    * `cents` is written last, so a reader never resolves a generation
-    * whose index is still in flight. There is no pointer file to swap:
-    * "current" is simply the highest committed generation — publishing
-    * is one directory write, atomic at the `_SUCCESS` rename, and a
-    * reader that resolved a generation PATH before a publish keeps
-    * reading exactly that data (old generations are immutable until
-    * [[retireOld]]). This is the table-service generation story for
-    * both compaction and re-centering.
+    * Commit is [[Generations]]': a publish writes all of a generation's
+    * artifacts into one temp dir and commits them by one exclusive
+    * rename, so a reader never resolves a generation with an artifact in
+    * flight, and concurrent publishers get distinct generations. There is
+    * no pointer file to swap: "current" is simply the highest committed
+    * generation, and a reader that resolved a generation PATH before a
+    * publish keeps reading exactly that data (old generations are
+    * immutable until [[retireOld]]). This is the table-service
+    * generation story for both compaction and re-centering.
     */
+  private val IvfArtifacts = Seq("index", "cents")
+  private val PqArtifacts = IvfArtifacts ++ Seq("pqbook", "pqcodes")
+
   def committedGenerations(root: String,
-                           conf: Configuration = new Configuration()): Seq[Long] = {
-    val r = new Path(root)
-    val fs = r.getFileSystem(conf)
-    if (!fs.exists(r)) Nil
-    else fs.listStatus(r).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-      .filter { n =>
-        fs.exists(new Path(r, s"gen=$n/index/_SUCCESS")) &&
-          fs.exists(new Path(r, s"gen=$n/cents/_SUCCESS"))
-      }
-      .sorted
-  }
+                           conf: Configuration = new Configuration()): Seq[Long] =
+    Generations.committed(root, IvfArtifacts, conf)
 
   def currentGeneration(root: String,
                         conf: Configuration = new Configuration()): Option[Long] =
     committedGenerations(root, conf).lastOption
 
-  def indexPath(root: String, n: Long): String = s"$root/gen=$n/index"
-  def centsPath(root: String, n: Long): String = s"$root/gen=$n/cents"
-  def pqBookPath(root: String, n: Long): String = s"$root/gen=$n/pqbook"
-  def pqCodesPath(root: String, n: Long): String = s"$root/gen=$n/pqcodes"
+  def indexPath(root: String, n: Long): String = Generations.path(root, n, "index")
+  def centsPath(root: String, n: Long): String = Generations.path(root, n, "cents")
+  def pqBookPath(root: String, n: Long): String = Generations.path(root, n, "pqbook")
+  def pqCodesPath(root: String, n: Long): String = Generations.path(root, n, "pqcodes")
 
-  /** Generations whose PQ artifacts are ALSO committed — the set
+  /** Generations whose PQ artifacts are committed too — the set
     * [[graft.ann.Ann.probeIvfPqGeneration]] resolves from. A plain
     * (index, cents) generation is not PQ-servable; a PQ generation is
-    * both. `cents` still commits last, after the PQ artifacts, so the
-    * four-way commit stays atomic at the same `_SUCCESS` rename.
+    * both.
     */
   def pqGenerations(root: String,
-                    conf: Configuration = new Configuration()): Seq[Long] = {
-    val r = new Path(root)
-    val fs = r.getFileSystem(conf)
-    committedGenerations(root, conf).filter { n =>
-      fs.exists(new Path(r, s"gen=$n/pqbook/_SUCCESS")) &&
-        fs.exists(new Path(r, s"gen=$n/pqcodes/_SUCCESS"))
-    }
-  }
+                    conf: Configuration = new Configuration()): Seq[Long] =
+    Generations.committed(root, PqArtifacts, conf)
 
   def currentPqGeneration(root: String,
                           conf: Configuration = new Configuration()): Option[Long] =
     pqGenerations(root, conf).lastOption
 
-  /** Write (index, cents) as the next generation under `root` and
-    * return its number. The index lands one file per cell (the
-    * compacted layout — publishing IS compaction); cents commit last.
+  /** `df` one file per cell — the compacted layout. */
+  private def writeCells(df: DataFrame, dir: Path): Unit =
+    df.repartition(col("cid")).write.partitionBy("cid").parquet(dir.toString)
+
+  /** Write (index, cents) as the next free generation under `root` and
+    * return its number. The index lands one file per cell (the compacted
+    * layout — publishing IS compaction).
     */
   def publishGeneration(spark: SparkSession, root: String,
-                        index: DataFrame, cents: DataFrame): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val n = committedGenerations(root, conf).lastOption.getOrElse(-1L) + 1
-    index.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath(root, n))
-    cents.coalesce(1).write.mode("overwrite").parquet(centsPath(root, n))
-    n
-  }
+                        index: DataFrame, cents: DataFrame): Long =
+    Generations.publishWith(root, IvfArtifacts,
+        spark.sessionState.newHadoopConf()) { tmp =>
+      writeCells(index, new Path(tmp, "index"))
+      cents.coalesce(1).write.parquet(new Path(tmp, "cents").toString)
+    }
 
   /** Write a full IVF-PQ generation: index + quantizer + residual
-    * codebook + codes. Codes are DERIVED here, from the committed index
-    * files against exactly these centroids and this codebook
-    * ([[graft.ann.Ann.pqEncodedWith]] over the residuals — the batch
-    * entry's encode criterion verbatim), so a generation can never hold
-    * codes encoded against some other quantizer. Write order: index,
-    * codes, codebook, cents — cents last, so [[pqGenerations]] resolves
-    * a generation only once all four artifacts are durable.
+    * codebook + codes. Codes are DERIVED here, from the index files just
+    * written into the generation's temp dir, against exactly these
+    * centroids and this codebook ([[graft.ann.Ann.pqEncodedWith]] over
+    * the residuals — the batch entry's encode criterion verbatim), so a
+    * generation can never hold codes encoded against some other
+    * quantizer. All four commit together in the one rename.
     */
   def publishGenerationPq(spark: SparkSession, root: String,
                           index: DataFrame, cents: DataFrame,
                           codebook: DataFrame): Long = {
     import org.apache.spark.sql.functions.{broadcast, expr}
-    val conf = spark.sessionState.newHadoopConf()
-    val n = committedGenerations(root, conf).lastOption.getOrElse(-1L) + 1
-    index.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath(root, n))
-    val idx = spark.read.parquet(indexPath(root, n))
-      .select(col("vec_id"), col("v"), col("cid").cast("long").as("cid"))
-    val residuals = idx.join(broadcast(cents), Seq("cid"))
-      .select(col("vec_id"),
-        expr("zip_with(v, cv, (a, b) -> a - b)").as("v"))
-    val codes = graft.ann.Ann.pqEncodedWith(residuals, codebook)
-      .join(idx.select(col("vec_id"), col("cid")), Seq("vec_id"))
-    codes.repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(pqCodesPath(root, n))
-    codebook.coalesce(1).write.mode("overwrite").parquet(pqBookPath(root, n))
-    cents.coalesce(1).write.mode("overwrite").parquet(centsPath(root, n))
-    n
+    Generations.publishWith(root, IvfArtifacts,
+        spark.sessionState.newHadoopConf()) { tmp =>
+      writeCells(index, new Path(tmp, "index"))
+      val idx = spark.read.parquet(new Path(tmp, "index").toString)
+        .select(col("vec_id"), col("v"), col("cid").cast("long").as("cid"))
+      val residuals = idx.join(broadcast(cents), Seq("cid"))
+        .select(col("vec_id"),
+          expr("zip_with(v, cv, (a, b) -> a - b)").as("v"))
+      writeCells(graft.ann.Ann.pqEncodedWith(residuals, codebook)
+        .join(idx.select(col("vec_id"), col("cid")), Seq("vec_id")),
+        new Path(tmp, "pqcodes"))
+      codebook.coalesce(1).write.parquet(new Path(tmp, "pqbook").toString)
+      cents.coalesce(1).write.parquet(new Path(tmp, "cents").toString)
+    }
   }
 
   /** [[recenter]] for a PQ generation: re-fit the quantizer, re-assign
@@ -217,13 +203,8 @@ object IndexMaintenance {
     * drained off the old paths.
     */
   def retireOld(root: String, keep: Int = 2,
-                conf: Configuration = new Configuration()): Seq[Long] = {
-    val gens = committedGenerations(root, conf)
-    val retire = gens.dropRight(keep)
-    val fs = new Path(root).getFileSystem(conf)
-    retire.foreach(n => fs.delete(new Path(s"$root/gen=$n"), true))
-    retire
-  }
+                conf: Configuration = new Configuration()): Seq[Long] =
+    Generations.retireOld(root, IvfArtifacts, keep, conf)
 
   /** Data files (not metadata) per partition-value directory under an
     * index dir — the observable compaction reduces. `conf` supplies

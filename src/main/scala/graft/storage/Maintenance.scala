@@ -5,41 +5,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** The periodic GC sweep over every INCREMENTAL store a corpus accrues
-  * (VERDICT r19 #3): [[Generations.vacuumPlan]]'s dead-directory
-  * analysis applied to the segment-chain roots the ensure protocol
-  * grows (`graft_shingles`, `graft_substr_wins`, `graft_chunk_h`,
-  * `graft_chunk_v`), planned and executed in one call with report
-  * rows — the maintenance job a days-long intake deployment schedules
-  * between reader drains, so superseded chains stop accumulating.
-  *
-  * What is DEAD in an incremental root, and why nothing else is:
-  *
-  *   - `rebased` — committed generations OLDER than the newest BASE:
-  *     [[Materialize.readIncrementalAt]] starts every chain at the
-  *     newest base ≤ the pinned generation, so once a re-base commits,
-  *     no generation below it is reachable by any CURRENT resolve
-  *     ([[Materialize.retireRebased]]'s set — this sweep subsumes that
-  *     per-store call);
-  *   - `orphan` — committed-gen-numbered directories with NO commit
-  *     marker strictly below the current generation: a crashed write's
-  *     leftovers, provably dead because [[Materialize
-  *     .ensureIncrementalWithGen]] numbers strictly above the last
-  *     committed generation (the [[Generations.vacuumPlan]] argument);
-  *   - `inprogress` — `.gen=<n>.inprogress-<uuid>` temp directories
-  *     with n ≤ the current generation AND a modification time older
-  *     than [[InprogressGraceMs]]: their writer either committed
-  *     (rename succeeded — the temp name is gone), lost a race and
-  *     reaped itself, or crashed. The n-rule ALONE is not safe: a live
-  *     writer targets n > current when it STARTS, but a rival can
-  *     commit that generation while the write is still in flight — the
-  *     loser's temp then sits at n ≤ current and a graceless sweep
-  *     would delete it mid-write, turning the ensure protocol's
-  *     designed lost-race reap-and-reloop into a hard job failure. The
-  *     grace window covers the loser until it reaches its own reap
-  *     path; a writer that BOTH lost the race and has made no
-  *     filesystem progress for the whole window is indistinguishable
-  *     from a crash — the documented limit, set far above any single
-  *     store write.
+  * (VERDICT r19 #3): the one vacuum plan ([[Generations.vacuumPlan]],
+  * through [[Materialize.vacuumPlan]]) over the segment-chain roots the
+  * ensure protocol grows (`graft_shingles`, `graft_substr_wins`,
+  * `graft_chunk_h`, `graft_chunk_v`), planned and executed in one call
+  * with report rows — the maintenance job a days-long intake deployment
+  * schedules between reader drains, so superseded chains stop
+  * accumulating. Its `rebased` rule retires committed generations OLDER
+  * than the newest BASE: [[Materialize.readIncrementalAt]] starts every
+  * chain at the newest base ≤ the pinned generation.
   *
   * Growth segments at or above the newest base SURVIVE — they are the
   * chain current readers serve — as does anything a pinned long-lived
@@ -68,13 +42,8 @@ object Maintenance {
     graft.pipeline.Chunking.ChunkHashStore,
     graft.pipeline.ChunkSemantic.ChunkVecStore)
 
-  /** How long a sub-current `.inprogress` temp must sit unmodified
-    * before the sweep may reap it — the lost-race live-writer guard
-    * (see the class scaladoc's inprogress rule). One hour dwarfs any
-    * single store write while keeping crashed temps from surviving
-    * more than one maintenance cycle.
-    */
-  val InprogressGraceMs: Long = 60L * 60 * 1000
+  /** [[Generations.InprogressGraceMs]]. */
+  val InprogressGraceMs: Long = Generations.InprogressGraceMs
 
   /** One plannable deletion: `dir` is the directory name under the
     * store root; `gen` its parsed generation; `kind` ∈ rebased |
@@ -85,83 +54,11 @@ object Maintenance {
 
   /** The sweep's plan — nothing deleted. */
   def vacuumPlanStores(t: Tables): Seq[VacuumAction] =
-    incrementalStores.flatMap(planFor(t, _))
-
-  private def planFor(t: Tables,
-                      s: Materialize.StoreDef): Seq[VacuumAction] = {
-    val spark = t.spark
-    val conf = spark.sessionState.newHadoopConf()
-    val rootName = Materialize.incRootName(t, s)
-    val root = new Path(
-      new Path(spark.conf.get("spark.sql.warehouse.dir")), rootName)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Nil
-    val gens = Generations.committed(root.toString,
-      Materialize.RowsArtifact, conf)
-    val cur = gens.lastOption.getOrElse(Long.MinValue)
-    val lastBase = gens.reverse.find { n =>
-      spark.read
-        .parquet(Generations.path(root.toString, n, Materialize.InvArtifact))
-        .select("base").head.getBoolean(0)
-    }.getOrElse(0L)
-    val rebased = gens.filter(_ < lastBase)
-      .map(n => VacuumAction(s.prefix, rootName, s"gen=$n", n, "rebased"))
-    val listedSt = fs.listStatus(root).toSeq.filter(_.isDirectory)
-    val listed = listedSt.map(_.getPath.getName)
-    val orphans = listed.filter(_.startsWith("gen="))
-      .flatMap(d => d.stripPrefix("gen=").toLongOption.map(d -> _))
-      .filterNot { case (_, n) => gens.contains(n) }
-      .filter { case (_, n) => n < cur }
-      .map { case (d, n) => VacuumAction(s.prefix, rootName, d, n, "orphan") }
-    val now = System.currentTimeMillis()
-    val inprog = listedSt.filter(_.getPath.getName.startsWith(".gen="))
-      .flatMap { st =>
-        val d = st.getPath.getName
-        d.stripPrefix(".gen=").takeWhile(_ != '.') match {
-          case num if num.nonEmpty && num.forall(_.isDigit) =>
-            Some((st, d, num.toLong))
-          case _ => None
-        }
-      }
-      .filter { case (st, _, n) =>
-        n <= cur && now - lastProgressMs(fs, st) > InprogressGraceMs
-      }
-      .map { case (_, d, n) =>
-        VacuumAction(s.prefix, rootName, d, n, "inprogress")
-      }
-    (rebased ++ orphans ++ inprog).sortBy(a => (a.gen, a.dir))
-  }
-
-  /** Newest modification time observable under a temp dir: the dir's
-    * own mtime (from the root listing's FileStatus — never re-statted,
-    * so a writer committing or self-reaping between the listing and
-    * this walk cannot crash the plan, ADVICE r20 medium) maxed with
-    * every file AND DIRECTORY inside it. An in-flight part write lands
-    * files under `rows/_temporary/...` WITHOUT refreshing the top
-    * dir's mtime on HDFS/local FS, so the top-level stat alone would
-    * measure "time since the write STARTED", not "time since last
-    * progress" (ADVICE r20 low); and a writer whose most recent
-    * progress is deep DIRECTORY creation — Spark makes task-attempt
-    * dirs before the first part file opens — shows progress only in
-    * directory mtimes, which `fs.listFiles` (files-only) missed, so a
-    * slow task-setup phase could read as stale (ADVICE r21 low): the
-    * walk is a recursive listStatus counting both. Any listing failure
-    * during the walk means the dir is vanishing right now (commit
-    * rename or self-reap won the race) — report it as live; it costs
-    * one maintenance cycle at most.
-    */
-  private def lastProgressMs(fs: org.apache.hadoop.fs.FileSystem,
-                             st: org.apache.hadoop.fs.FileStatus): Long =
-    try {
-      var newest = st.getModificationTime
-      def walk(p: org.apache.hadoop.fs.Path): Unit =
-        fs.listStatus(p).foreach { c =>
-          if (c.getModificationTime > newest) newest = c.getModificationTime
-          if (c.isDirectory) walk(c.getPath)
-        }
-      walk(st.getPath)
-      newest
-    } catch { case _: java.io.IOException => Long.MaxValue }
+    incrementalStores.flatMap { s =>
+      val rootName = Materialize.incRootName(t, s)
+      Materialize.vacuumPlan(t, s)
+        .map(d => VacuumAction(s.prefix, rootName, d.dir, d.gen, d.kind))
+    }
 
   /** Execute [[vacuumPlanStores]] and return one report row per
     * deleted directory: (store, root, gen, kind, dir), sorted — the

@@ -1,7 +1,7 @@
 package graft.storage
 
 import graft.Tables
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared ensure-write machinery for per-corpus warehouse caches (the
@@ -61,10 +61,12 @@ object Materialize {
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .mkString(",")
       catch { case _: java.io.FileNotFoundException => "absent" }
-    val key = s"${t.dir}|$table|$inventory|$config"
+    hash12(s"${t.dir}|$table|$inventory|$config")
+  }
+
+  private def hash12(key: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
 
   // ------------------------------------------------- incremental stores
   //
@@ -96,9 +98,9 @@ object Materialize {
   // file changed or vanished) is not growth: the store re-bases with a
   // fresh full build, because per-file purity says nothing about rows
   // derived from bytes that no longer exist. Publication is
-  // write-to-temp + one directory rename with the parquet _SUCCESS
-  // inside ([[Generations]]' commit marker), so a concurrent reader
-  // never observes a half-written generation.
+  // [[Generations.commitOnce]] — write to a temp dir, one exclusive
+  // rename — so a concurrent reader never observes a half-written
+  // generation.
 
   /** Data-file inventory of `t.dir/<table>.parquet`: (name, len,
     * mtime) per part file, sorted by name — underscore/dot entries
@@ -106,7 +108,7 @@ object Materialize {
     * store rows.
     */
   private def dataFiles(t: Tables, table: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
+      : Seq[FileStatus] = {
     val src = new Path(t.dir, s"$table.parquet")
     val fs = src.getFileSystem(t.spark.sessionState.newHadoopConf())
     fs.listStatus(src).toSeq
@@ -118,11 +120,8 @@ object Materialize {
   /** The growth-stable tag of an incremental store: corpus dir + table
     * + config, NO inventory — the root must survive corpus growth.
     */
-  private[graft] def stableTag(t: Tables, s: StoreDef): String = {
-    val key = s"${t.dir}|${s.table}|${s.config}"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
+  private[graft] def stableTag(t: Tables, s: StoreDef): String =
+    hash12(s"${t.dir}|${s.table}|${s.config}")
 
   private[graft] def incRootName(t: Tables, s: StoreDef): String =
     s"${s.prefix}_gens_${stableTag(t, s)}"
@@ -132,6 +131,43 @@ object Materialize {
 
   private[storage] val RowsArtifact = "rows"
   private[storage] val InvArtifact = "inventory"
+
+  private type FileKey = (String, Long, Long)
+
+  private def keyOf(f: FileStatus): FileKey =
+    (f.getPath.getName, f.getLen, f.getModificationTime)
+
+  /** The file inventory recorded by generation `n`'s manifest. */
+  private def manifest(spark: SparkSession, root: String, n: Long): Seq[FileKey] =
+    spark.read.parquet(Generations.path(root, n, InvArtifact))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+
+  /** The newest of the committed `gens` whose manifest says `base` — where
+    * every read chain starts (0 when none does).
+    */
+  private def newestBase(spark: SparkSession, root: String,
+                         gens: Seq[Long]): Long =
+    gens.reverse.find { n =>
+      spark.read.parquet(Generations.path(root, n, InvArtifact))
+        .select("base").head.getBoolean(0)
+    }.getOrElse(0L)
+
+  /** The growth/rewrite decision for the source files `cur` against the
+    * newest committed manifest (None: nothing committed yet): the files a
+    * build reads, and whether it publishes a base. Growth (every recorded
+    * file still there, byte-identically) reads only the new files; a
+    * first build or a rewrite (a recorded file changed or vanished)
+    * re-bases on the full corpus.
+    */
+  private def pendingOf(recorded: Option[Seq[FileKey]],
+                        cur: Seq[FileStatus]): (Seq[FileStatus], Boolean) =
+    recorded match {
+      case Some(rec) if rec.forall(cur.map(keyOf).contains) =>
+        val names = rec.map(_._1).toSet
+        (cur.filterNot(f => names(f.getPath.getName)), false)
+      case _ => (cur, true)
+    }
 
   /** Ensure the incremental store of `s` is current for `t`'s corpus
     * and return it. `buildFrom` maps a frame of SOURCE rows (the whole
@@ -171,51 +207,33 @@ object Materialize {
     val conf = spark.sessionState.newHadoopConf()
     val root = incRoot(t, s)
     val cur = dataFiles(t, s.table)
-    val curKeys = cur.map(f =>
-      (f.getPath.getName, f.getLen, f.getModificationTime))
+    val curKeys = cur.map(keyOf)
 
-    def readFrom(files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame =
+    def readFrom(files: Seq[FileStatus]): DataFrame =
       spark.read.parquet(files.map(_.getPath.toString): _*)
 
-    def publish(n: Long, rows: DataFrame, base: Boolean,
-                inv: Seq[(String, Long, Long)]): Unit = {
+    def publish(n: Long, rows: DataFrame, base: Boolean): Unit = {
       import spark.implicits._
-      val fs = root.getFileSystem(conf)
-      val tmp = new Path(root,
-        s".gen=$n.inprogress-${java.util.UUID.randomUUID()}")
-      inv.map { case (f, l, m) => (f, l, m, base) }
-        .toDF("file", "len", "mtime", "base")
-        .coalesce(1)
-        .write.parquet(new Path(tmp, InvArtifact).toString)
-      rows.write.parquet(new Path(tmp, RowsArtifact).toString)
-      val dst = new Path(root, s"gen=$n")
-      // rename-fails-on-existing-destination: the exists pre-check keeps
-      // a dir-into-dir filesystem (HDFS) from nesting tmp INSIDE a
-      // concurrent winner's committed generation instead of returning
-      // false (ADVICE r17)
-      val committed = !fs.exists(dst) && fs.rename(tmp, dst)
-      if (!committed) {
-        fs.delete(tmp, true)
-        fs.delete(new Path(dst, tmp.getName), true) // reap a nested loser
-        // A failed publish must never be SILENT: either a concurrent
-        // writer committed this (or a later) generation — the ensure
-        // loop below re-reads ITS manifest and recomputes the pending
-        // decision against the locally observed inventory — or the
-        // rename genuinely failed and returning would serve a stale
-        // store as fresh (the reader contract: rows for every current
-        // inventory file).
-        val now = Generations.committed(root.toString, RowsArtifact, conf)
-        if (!now.exists(_ >= n))
-          throw new java.io.IOException(
-            s"failed to publish gen=$n under $root and no concurrent " +
-              "writer committed it — refusing to serve the stale store")
+      val won = Generations.commitOnce(root.getFileSystem(conf),
+          new Path(root, s"gen=$n")) { tmp =>
+        curKeys.map { case (f, l, m) => (f, l, m, base) }
+          .toDF("file", "len", "mtime", "base")
+          .coalesce(1)
+          .write.parquet(new Path(tmp, InvArtifact).toString)
+        rows.write.parquet(new Path(tmp, RowsArtifact).toString)
       }
+      // Lost: a concurrent writer committed this (or a later) generation
+      // — the ensure loop below re-reads ITS manifest and recomputes the
+      // pending decision against the locally observed inventory. Unless
+      // no committed generation ≥ n exists: `gen=<n>` is then a dead
+      // leftover, and returning would serve a stale store as fresh (the
+      // reader contract: rows for every current inventory file).
+      if (!won && !Generations.committed(root.toString, RowsArtifact, conf)
+          .exists(_ >= n))
+        throw new java.io.IOException(
+          s"failed to publish gen=$n under $root and no concurrent " +
+            "writer committed it — refusing to serve the stale store")
     }
-
-    def manifest(n: Long): Seq[(String, Long, Long)] = spark.read
-      .parquet(Generations.path(root.toString, n, InvArtifact))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
     // settled iff the newest committed manifest covers every locally
     // observed inventory file (byte-identically). NOT "a publish
@@ -229,7 +247,7 @@ object Materialize {
     def settled(): Boolean = {
       val gens = Generations.committed(root.toString, RowsArtifact, conf)
       gens.nonEmpty && {
-        val rec = manifest(gens.last).toSet
+        val rec = manifest(spark, root.toString, gens.last).toSet
         curKeys.forall(rec.contains)
       }
     }
@@ -241,23 +259,11 @@ object Materialize {
         throw new java.io.IOException(
           s"ensure of $root failed to converge after $attempts attempts " +
             "— committed manifests keep missing locally observed files")
-      val gens = Generations.committed(root.toString, RowsArtifact, conf)
-      if (gens.isEmpty) {
-        publish(0L, buildFrom(readFrom(cur)), base = true, curKeys)
-      } else {
-        val recorded = manifest(gens.last)
-        val recordedNames = recorded.map(_._1).toSet
-        val growthOnly = recorded.forall(curKeys.contains)
-        val newFiles = cur.filterNot(f => recordedNames(f.getPath.getName))
-        if (growthOnly) {
-          publish(gens.last + 1, buildFrom(readFrom(newFiles)),
-            base = false, curKeys)
-        } else {
-          // rewrite: previously-covered bytes changed — re-base
-          publish(gens.last + 1, buildFrom(readFrom(cur)),
-            base = true, curKeys)
-        }
-      }
+      val last = Generations.committed(root.toString, RowsArtifact, conf)
+        .lastOption
+      val (files, base) =
+        pendingOf(last.map(manifest(spark, root.toString, _)), cur)
+      publish(last.fold(0L)(_ + 1), buildFrom(readFrom(files)), base)
     }
     val cur2 = Generations.committed(root.toString, RowsArtifact, conf)
     require(cur2.nonEmpty,
@@ -274,8 +280,8 @@ object Materialize {
     * `ClusterStore.readLabels` deployment shape).
     */
   def currentIncrementalGen(spark: SparkSession, root: String): Option[Long] =
-    Generations.current(root, RowsArtifact,
-      spark.sessionState.newHadoopConf())
+    Generations.committed(root, RowsArtifact,
+      spark.sessionState.newHadoopConf()).lastOption
 
   /** Read an incremental root AT a pinned generation: the segment
     * chain from that generation's last base through it. Every dir in
@@ -288,36 +294,34 @@ object Materialize {
     val gens = Generations.committed(root, RowsArtifact, conf)
       .filter(_ <= gen)
     require(gens.nonEmpty, s"no committed generation <= $gen under $root")
-    val since = gens.reverse.find { n =>
-      spark.read.parquet(Generations.path(root, n, InvArtifact))
-        .select("base").head.getBoolean(0)
-    }.getOrElse(0L)
+    val since = newestBase(spark, root, gens)
     spark.read.parquet(gens.filter(_ >= since)
       .map(n => Generations.path(root, n, RowsArtifact)): _*)
   }
 
-  /** The files a growth pass would read right now: (new files,
-    * isRewrite) — the decision surface MaterializeSpec pins without
+  /** The files an ensure pass would read right now: (files, isRebase)
+    * — the ensure loop's own decision, which MaterializeSpec pins without
     * re-running a build.
     */
   private[graft] def incrementalPending(t: Tables, s: StoreDef)
       : (Seq[String], Boolean) = {
-    val conf = t.spark.sessionState.newHadoopConf()
+    val root = incRoot(t, s).toString
+    val last = Generations.committed(root, RowsArtifact,
+      t.spark.sessionState.newHadoopConf()).lastOption
+    val (files, base) = pendingOf(last.map(manifest(t.spark, root, _)),
+      dataFiles(t, s.table))
+    (files.map(_.getPath.toString), base)
+  }
+
+  /** The vacuum plan of `s`'s incremental root ([[Generations.vacuumPlan]]):
+    * `rebased` = committed generations older than the newest base, which
+    * no current reader resolves, plus dead orphans and stale temp dirs.
+    */
+  private[storage] def vacuumPlan(t: Tables, s: StoreDef): Seq[Generations.Dead] = {
     val root = incRoot(t, s)
-    val cur = dataFiles(t, s.table)
-    val gens = Generations.committed(root.toString, RowsArtifact, conf)
-    if (gens.isEmpty) (cur.map(_.getPath.toString), true)
-    else {
-      val recorded = t.spark.read
-        .parquet(Generations.path(root.toString, gens.last, InvArtifact))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val curKeys = cur.map(f =>
-        (f.getPath.getName, f.getLen, f.getModificationTime))
-      val rewrite = !recorded.forall(curKeys.contains)
-      val names = recorded.map(_._1).toSet
-      (cur.filterNot(f => names(f.getPath.getName)).map(_.getPath.toString),
-        rewrite)
+    Generations.vacuumPlan(root, Seq(RowsArtifact),
+        t.spark.sessionState.newHadoopConf(), "rebased") { gens =>
+      gens.filter(_ < newestBase(t.spark, root.toString, gens))
     }
   }
 
@@ -327,42 +331,10 @@ object Materialize {
     * them — run after readers drain, the [[reapStale]] /
     * [[Generations.retireOld]] contract. Returns retired gen numbers.
     */
-  def retireRebased(t: Tables, s: StoreDef): Seq[Long] = {
-    val conf = t.spark.sessionState.newHadoopConf()
-    val root = incRoot(t, s).toString
-    val gens = Generations.committed(root, RowsArtifact, conf)
-    if (gens.isEmpty) return Nil
-    val lastBase = gens.reverse.find { n =>
-      t.spark.read.parquet(Generations.path(root, n, InvArtifact))
-        .select("base").head.getBoolean(0)
-    }.getOrElse(0L)
-    val retire = gens.filter(_ < lastBase)
-    val fs = new Path(root).getFileSystem(conf)
-    retire.foreach(n => fs.delete(new Path(s"$root/gen=$n"), true))
-    retire
-  }
-
-  /** [[reapStale]] for incremental roots: delete every
-    * `<prefix>_gens_<tag>` dir whose stable tag is not in `keep`.
-    * Stale roots come from retuned configs or other corpora's temp
-    * dirs — never from growth (the stable tag survives it, by design).
-    */
-  def reapStaleIncremental(spark: SparkSession, prefix: String,
-                           keep: Set[String]): Seq[String] = {
-    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
-    val pat = java.util.regex.Pattern.compile(
-      java.util.regex.Pattern.quote(prefix) + "_gens_([0-9a-f]{12})")
-    if (!fs.exists(wh)) Nil
-    else fs.listStatus(wh).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val m = pat.matcher(st.getPath.getName)
-        if (m.matches() && !keep.contains(m.group(1))) Some(st.getPath)
-        else None
-      }
-      .map { p => fs.delete(p, true); p.getName }
-  }
+  def retireRebased(t: Tables, s: StoreDef): Seq[Long] =
+    Generations.remove(incRoot(t, s),
+      vacuumPlan(t, s).filter(_.kind == "rebased"),
+      t.spark.sessionState.newHadoopConf()).map(_.gen)
 
   /** Delete every warehouse cache dir of `prefix` whose tag is not in
     * `keep`; returns the reaped dir names. Tag churn (corpus
@@ -376,6 +348,11 @@ object Materialize {
     * Operational maintenance, not a query-path call: run it AFTER
     * consumers of the old tags have drained, same contract as
     * `IndexMaintenance.retireOld`.
+    *
+    * Incremental roots `<prefix>_gens_<stableTag>` are reaped by the same
+    * call with prefix `<prefix>_gens` and the live stable tags as `keep`.
+    * Their stale roots come from retuned configs or other corpora's temp
+    * dirs — never from growth (the stable tag survives it, by design).
     */
   def reapStale(spark: SparkSession, prefix: String,
                 keep: Set[String]): Seq[String] = {
@@ -398,14 +375,11 @@ object Materialize {
     * `<prefix>_<tag>` unless already present; return the read-back
     * frame. `partitionCols` forwards to `partitionBy`.
     *
-    * Publication is write-to-temp + single FS rename, so concurrent
-    * callers sharing one warehouse (parallel suites, bench + test)
-    * never observe a partially-written cache dir: either the rename
-    * lands the complete directory, or it fails because another caller
-    * already published and this caller's temp dir is discarded. (If a
-    * racing rename on a dir-into-dir filesystem nests the temp dir
-    * inside the winner's, its dot-prefixed name keeps Spark's file
-    * index from ever reading it; the delete below reaps it.)
+    * Publication is [[Generations.commitOnce]] — write to a temp dir,
+    * one exclusive rename — so concurrent callers sharing one warehouse
+    * (parallel suites, bench + test) never observe a partially-written
+    * cache dir: either this caller's rename lands the complete
+    * directory, or another caller's already did and this one serves it.
     */
   def ensureParquet(spark: SparkSession, prefix: String, tag: String,
                     df: => DataFrame,
@@ -417,22 +391,23 @@ object Materialize {
   /** [[ensureParquet]] at an explicit destination path — for stores
     * whose layout is not `<warehouse>/<prefix>_<tag>` (e.g. the eval
     * corpus dir, which must look like a testdata dir:
-    * `<root>/documents.parquet`). Same write-to-temp + rename
-    * publication.
+    * `<root>/documents.parquet`). Same publication. A `dst` that exists
+    * without `_SUCCESS` (a partial delete) is no store: the call throws
+    * rather than serve it.
     */
   private[graft] def ensureParquetAt(spark: SparkSession, dst: Path,
                                      df: => DataFrame,
                                      partitionCols: Seq[String] = Nil): DataFrame = {
     val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new Path(dst, "_SUCCESS"))) {
-      val tmp = new Path(dst.getParent,
-        s".${dst.getName}.inprogress-${java.util.UUID.randomUUID()}")
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      if (fs.exists(dst) || !fs.rename(tmp, dst)) fs.delete(tmp, true)
-      fs.delete(new Path(dst, tmp.getName), true) // reap a nested loser
-    }
+    val done = new Path(dst, "_SUCCESS")
+    if (!fs.exists(done) && !Generations.commitOnce(fs, dst) { tmp =>
+          val w = df.write.mode("overwrite")
+          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+            .parquet(tmp.toString)
+        } && !fs.exists(done))
+      throw new java.io.IOException(
+        s"$dst exists without _SUCCESS and no writer committed it — " +
+          "refusing to serve a partial store (delete it to rebuild)")
     spark.read.parquet(dst.toString)
   }
 }
