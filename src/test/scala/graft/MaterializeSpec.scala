@@ -116,7 +116,8 @@ class MaterializeSpec extends SparkSpec {
     assert(scans.size == 3, "retire must not trigger a rebuild")
   }
 
-  test("reapStale on `<prefix>_gens` deletes orphaned incremental roots, keeps live ones") {
+  // incremental roots are reaped by reapStale on `<prefix>_gens`
+  test("reapStaleIncremental deletes orphaned roots, keeps live ones") {
     val dirA = java.nio.file.Files.createTempDirectory("graft_incA").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft_incB").toString
     val store = Materialize.StoreDef("graft_tst_reap", "documents", "tok=1")
