@@ -1,17 +1,20 @@
 package graft
 
+import graft.storage.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Typed loaders for the driver's testdata star schema (TESTDATA.md).
   *
-  * Scans stay declarative (`spark.read.parquet`) so column pruning and
-  * predicate pushdown reach the parquet reader untouched.
+  * Scans stay declarative (a plain parquet relation) so column pruning
+  * and predicate pushdown reach the parquet reader untouched. The schema
+  * is inferred once per file inventory ([[graft.storage.ParquetRead]]):
+  * repeated reads of unchanged tables launch no schema-inference job.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")

@@ -923,12 +923,12 @@ object Ann {
     */
   def probeIvfPqGeneration(t: Tables, root: String,
                            gen: Option[Long] = None): DataFrame = {
-    import graft.storage.IndexMaintenance
+    import graft.storage.{IndexMaintenance, ParquetRead}
     val spark = t.spark
     val n = gen.orElse(IndexMaintenance.currentPqGeneration(root,
       spark.sessionState.newHadoopConf())).getOrElse(
       throw new IllegalStateException(s"no committed PQ generation under $root"))
-    val idx = spark.read.parquet(IndexMaintenance.indexPath(root, n))
+    val idx = ParquetRead(spark, IndexMaintenance.indexPath(root, n))
       .select(col("vec_id"), col("v"), col("cid").cast("long").as("cid"))
     val qv = t.embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -939,9 +939,9 @@ object Ann {
     probeIvfPqResidualWith(
       qv,
       idx.select(col("vec_id"), col("cid")),
-      spark.read.parquet(IndexMaintenance.centsPath(root, n)),
-      spark.read.parquet(IndexMaintenance.pqBookPath(root, n)),
-      spark.read.parquet(IndexMaintenance.pqCodesPath(root, n))
+      ParquetRead(spark, IndexMaintenance.centsPath(root, n)),
+      ParquetRead(spark, IndexMaintenance.pqBookPath(root, n)),
+      ParquetRead(spark, IndexMaintenance.pqCodesPath(root, n))
         .select(col("vec_id"), col("s"), col("code")),
       e)
   }

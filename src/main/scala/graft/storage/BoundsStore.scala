@@ -29,6 +29,6 @@ object BoundsStore extends GenerationStore("bounds") {
     publishGeneration(t.spark, root, graft.pipeline.Mixing.ccnetBounds(t))
 
   def readBounds(spark: SparkSession, root: String, n: Long): DataFrame =
-    spark.read.parquet(boundsPath(root, n))
+    ParquetRead(spark, boundsPath(root, n))
       .select(col("lang"), col("s1"), col("s2"))
 }

@@ -31,7 +31,7 @@ object ClusterStore extends GenerationStore("labels") {
     publishGeneration(t.spark, root, graft.dedup.Dedup.nearDupClusters(t))
 
   def readLabels(spark: SparkSession, root: String, n: Long): DataFrame =
-    spark.read.parquet(labelsPath(root, n))
+    ParquetRead(spark, labelsPath(root, n))
       .select(col("doc_id"), col("keeper_id"), col("cluster_size"))
 
   /** Docs whose cluster KEEPER changed between committed generations

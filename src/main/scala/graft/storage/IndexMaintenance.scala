@@ -44,10 +44,10 @@ object IndexMaintenance {
       qualified(srcDir, hconf) != qualified(dstDir, hconf),
       "compactCells never compacts in place: the source's _spark_metadata " +
         "manifest would be broken — compact into a new generation")
-    spark.read.parquet(srcDir)
+    ParquetRead(spark, srcDir)
       .repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(dstDir)
-    spark.read.parquet(dstDir)
+    ParquetRead(spark, dstDir)
   }
 
   // ------------------------------------------------------- generations
@@ -132,7 +132,7 @@ object IndexMaintenance {
     Generations.publishWith(root, IvfArtifacts,
         spark.sessionState.newHadoopConf()) { tmp =>
       writeCells(index, new Path(tmp, "index"))
-      val idx = spark.read.parquet(new Path(tmp, "index").toString)
+      val idx = ParquetRead(spark, new Path(tmp, "index").toString)
         .select(col("vec_id"), col("v"), col("cid").cast("long").as("cid"))
       val residuals = idx.join(broadcast(cents), Seq("cid"))
         .select(col("vec_id"),
@@ -159,9 +159,9 @@ object IndexMaintenance {
     val conf = spark.sessionState.newHadoopConf()
     val cur = currentPqGeneration(root, conf).getOrElse(
       throw new IllegalStateException(s"no committed PQ generation under $root"))
-    val vecs = spark.read.parquet(indexPath(root, cur))
+    val vecs = ParquetRead(spark, indexPath(root, cur))
       .select(col("vec_id"), col("v"))
-    val cents0 = spark.read.parquet(centsPath(root, cur))
+    val cents0 = ParquetRead(spark, centsPath(root, cur))
     val cents = graft.ann.Ann.ivfFitFrom(vecs, cents0, iters)
     val assigned = graft.ann.Ann.assignIndex(vecs, cents)
     val codebook = graft.ann.Ann.residualCodebookFrom(assigned, cents)
@@ -190,9 +190,9 @@ object IndexMaintenance {
     val conf = spark.sessionState.newHadoopConf()
     val cur = currentGeneration(root, conf).getOrElse(
       throw new IllegalStateException(s"no committed generation under $root"))
-    val vecs = spark.read.parquet(indexPath(root, cur))
+    val vecs = ParquetRead(spark, indexPath(root, cur))
       .select(col("vec_id"), col("v"))
-    val cents0 = spark.read.parquet(centsPath(root, cur))
+    val cents0 = ParquetRead(spark, centsPath(root, cur))
     val cents = graft.ann.Ann.ivfFitFrom(vecs, cents0, iters)
     publishGeneration(spark, root,
       graft.ann.Ann.assignIndex(vecs, cents), cents)

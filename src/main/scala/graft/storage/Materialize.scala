@@ -92,12 +92,14 @@ object Materialize {
   // Each generation is a [[Generations]]-committed SEGMENT: gen 0 (and
   // any generation whose manifest says `base = true`) holds a full
   // build; a growth generation holds ONLY the new files' rows, plus a
-  // manifest recording the cumulative inventory it covers. Reading the
-  // store = one parquet read over the segment paths since the last
-  // base — columnar, no merge work. A REWRITE (any previously-recorded
-  // file changed or vanished) is not growth: the store re-bases with a
-  // fresh full build, because per-file purity says nothing about rows
-  // derived from bytes that no longer exist. Publication is
+  // manifest recording the cumulative inventory it covers and the
+  // generation its read chain starts at (`base_gen`, its newest base).
+  // Reading the store = one parquet read over the segment paths since
+  // that base — columnar, no merge work, and one manifest read however
+  // long the chain. A REWRITE (any previously-recorded file changed or
+  // vanished) is not growth: the store re-bases with a fresh full
+  // build, because per-file purity says nothing about rows derived
+  // from bytes that no longer exist. Publication is
   // [[Generations.commitOnce]] — write to a temp dir, one exclusive
   // rename — so a concurrent reader never observes a half-written
   // generation.
@@ -121,7 +123,13 @@ object Materialize {
     * + config, NO inventory — the root must survive corpus growth.
     */
   private[graft] def stableTag(t: Tables, s: StoreDef): String =
-    hash12(s"${t.dir}|${s.table}|${s.config}")
+    hash12(s"${t.dir}|${s.table}|${s.config}|$Layout")
+
+  /** The manifest layout, folded into every stable tag: a root written
+    * under another layout is never read, the store rebuilds under a new
+    * root, and [[reapStale]] reaps the old one.
+    */
+  private val Layout = "manifest=base_gen"
 
   private[graft] def incRootName(t: Tables, s: StoreDef): String =
     s"${s.prefix}_gens_${stableTag(t, s)}"
@@ -137,21 +145,22 @@ object Materialize {
   private def keyOf(f: FileStatus): FileKey =
     (f.getPath.getName, f.getLen, f.getModificationTime)
 
-  /** The file inventory recorded by generation `n`'s manifest. */
-  private def manifest(spark: SparkSession, root: String, n: Long): Seq[FileKey] =
-    spark.read.parquet(Generations.path(root, n, InvArtifact))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-
-  /** The newest of the committed `gens` whose manifest says `base` — where
-    * every read chain starts (0 when none does).
+  /** Generation `n`'s manifest: the file inventory it covers, and the
+    * generation its read chain starts at (`n` itself for a base).
     */
-  private def newestBase(spark: SparkSession, root: String,
-                         gens: Seq[Long]): Long =
-    gens.reverse.find { n =>
-      spark.read.parquet(Generations.path(root, n, InvArtifact))
-        .select("base").head.getBoolean(0)
-    }.getOrElse(0L)
+  private def manifest(spark: SparkSession, root: String,
+                       n: Long): (Seq[FileKey], Long) = {
+    val rows = ParquetRead(spark, Generations.path(root, n, InvArtifact))
+      .select("file", "len", "mtime", "base_gen").collect().toSeq
+    (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
+      rows.headOption.fold(n)(_.getLong(3)))
+  }
+
+  /** One read of the committed `gens` from `since` on: a read chain. */
+  private def segments(spark: SparkSession, root: String, gens: Seq[Long],
+                       since: Long): DataFrame =
+    ParquetRead(spark, gens.filter(_ >= since)
+      .map(n => Generations.path(root, n, RowsArtifact)): _*)
 
   /** The growth/rewrite decision for the source files `cur` against the
     * newest committed manifest (None: nothing committed yet): the files a
@@ -210,14 +219,14 @@ object Materialize {
     val curKeys = cur.map(keyOf)
 
     def readFrom(files: Seq[FileStatus]): DataFrame =
-      spark.read.parquet(files.map(_.getPath.toString): _*)
+      ParquetRead(spark, files.map(_.getPath.toString): _*)
 
-    def publish(n: Long, rows: DataFrame, base: Boolean): Unit = {
+    def publish(n: Long, rows: DataFrame, since: Long): Unit = {
       import spark.implicits._
       val won = Generations.commitOnce(root.getFileSystem(conf),
           new Path(root, s"gen=$n")) { tmp =>
-        curKeys.map { case (f, l, m) => (f, l, m, base) }
-          .toDF("file", "len", "mtime", "base")
+        curKeys.map { case (f, l, m) => (f, l, m, since == n, since) }
+          .toDF("file", "len", "mtime", "base", "base_gen")
           .coalesce(1)
           .write.parquet(new Path(tmp, InvArtifact).toString)
         rows.write.parquet(new Path(tmp, RowsArtifact).toString)
@@ -235,6 +244,16 @@ object Materialize {
             "writer committed it — refusing to serve the stale store")
     }
 
+    // The committed generations and the newest one's manifest (None:
+    // nothing committed yet) — the one manifest read of a pass.
+    def newest(): Option[(Seq[Long], Seq[FileKey], Long)] = {
+      val gens = Generations.committed(root.toString, RowsArtifact, conf)
+      gens.lastOption.map { n =>
+        val (rec, since) = manifest(spark, root.toString, n)
+        (gens, rec, since)
+      }
+    }
+
     // settled iff the newest committed manifest covers every locally
     // observed inventory file (byte-identically). NOT "a publish
     // happened": a lost race's winner may have listed the source
@@ -244,32 +263,22 @@ object Materialize {
     // recomputes the pending decision (growth over exactly the files
     // the winner missed / re-base) until coverage holds; bounded —
     // each pass either settles or commits a strictly newer generation.
-    def settled(): Boolean = {
-      val gens = Generations.committed(root.toString, RowsArtifact, conf)
-      gens.nonEmpty && {
-        val rec = manifest(spark, root.toString, gens.last).toSet
-        curKeys.forall(rec.contains)
-      }
-    }
-
+    var last = newest()
     var attempts = 0
-    while (!settled()) {
+    while (!last.exists { case (_, rec, _) => curKeys.forall(rec.toSet) }) {
       attempts += 1
       if (attempts > 4)
         throw new java.io.IOException(
           s"ensure of $root failed to converge after $attempts attempts " +
             "— committed manifests keep missing locally observed files")
-      val last = Generations.committed(root.toString, RowsArtifact, conf)
-        .lastOption
-      val (files, base) =
-        pendingOf(last.map(manifest(spark, root.toString, _)), cur)
-      publish(last.fold(0L)(_ + 1), buildFrom(readFrom(files)), base)
+      val (files, base) = pendingOf(last.map(_._2), cur)
+      val n = last.fold(0L)(_._1.last + 1)
+      publish(n, buildFrom(readFrom(files)),
+        if (base) n else last.fold(n)(_._3))
+      last = newest()
     }
-    val cur2 = Generations.committed(root.toString, RowsArtifact, conf)
-    require(cur2.nonEmpty,
-      s"no committed generation under $root after ensure — " +
-        "publish neither landed nor found a concurrent winner")
-    (cur2.last, readIncrementalAt(spark, root.toString, cur2.last))
+    val (gens, _, since) = last.get
+    (gens.last, segments(spark, root.toString, gens, since))
   }
 
   /** Current committed generation of an incremental root — the number
@@ -294,9 +303,7 @@ object Materialize {
     val gens = Generations.committed(root, RowsArtifact, conf)
       .filter(_ <= gen)
     require(gens.nonEmpty, s"no committed generation <= $gen under $root")
-    val since = newestBase(spark, root, gens)
-    spark.read.parquet(gens.filter(_ >= since)
-      .map(n => Generations.path(root, n, RowsArtifact)): _*)
+    segments(spark, root, gens, manifest(spark, root, gens.last)._2)
   }
 
   /** The files an ensure pass would read right now: (files, isRebase)
@@ -308,7 +315,7 @@ object Materialize {
     val root = incRoot(t, s).toString
     val last = Generations.committed(root, RowsArtifact,
       t.spark.sessionState.newHadoopConf()).lastOption
-    val (files, base) = pendingOf(last.map(manifest(t.spark, root, _)),
+    val (files, base) = pendingOf(last.map(manifest(t.spark, root, _)._1),
       dataFiles(t, s.table))
     (files.map(_.getPath.toString), base)
   }
@@ -321,7 +328,9 @@ object Materialize {
     val root = incRoot(t, s)
     Generations.vacuumPlan(root, Seq(RowsArtifact),
         t.spark.sessionState.newHadoopConf(), "rebased") { gens =>
-      gens.filter(_ < newestBase(t.spark, root.toString, gens))
+      gens.lastOption.fold(gens) { n =>
+        gens.filter(_ < manifest(t.spark, root.toString, n)._2)
+      }
     }
   }
 
@@ -408,6 +417,6 @@ object Materialize {
       throw new java.io.IOException(
         s"$dst exists without _SUCCESS and no writer committed it — " +
           "refusing to serve a partial store (delete it to rebuild)")
-    spark.read.parquet(dst.toString)
+    ParquetRead(spark, dst.toString)
   }
 }

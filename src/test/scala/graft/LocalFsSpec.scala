@@ -129,6 +129,35 @@ class LocalFsSpec extends SparkSpec {
       s"expected only the control chmod, got:\n${commands.mkString("\n")}")
   }
 
+  test("two reads of one table through Tables start no process") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-localfs-tables")
+    Seq((0L, "AFRICA"), (1L, "AMERICA"), (2L, "ASIA")).toDF("r_regionkey", "r_name")
+      .repartition(2).write.parquet(dir.resolve("region.parquet").toString)
+    val t = Tables(spark, dir.toString)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      assert(t.region.count() == 3L)
+      assert(t.region.collect().length == 3)
+    } finally rec.stop()
+    val jfr: JPath = dir.resolve("tables.jfr")
+    rec.dump(jfr)
+    rec.close()
+    // the reads' own threads: this one (listing, planning) and the tasks
+    // (footers, rows); a session cleaner's `rm -rf` elsewhere is not theirs
+    val me = Thread.currentThread.getName
+    val commands = RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .filter { e =>
+        val thread = Option(e.getThread).map(_.getJavaName).getOrElse("")
+        thread == me || thread.startsWith("Executor task launch worker")
+      }
+      .map(_.getString("command"))
+    assert(commands.isEmpty, s"forks in two table reads:\n${commands.mkString("\n")}")
+  }
+
   test("a RunningCounts epoch commit forks nothing: state goes out as a changelog") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

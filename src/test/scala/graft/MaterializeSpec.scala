@@ -116,6 +116,29 @@ class MaterializeSpec extends SparkSpec {
     assert(scans.size == 3, "retire must not trigger a rebuild")
   }
 
+  test("a warm ensure reads one manifest, however long the chain") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_incwarm").toString
+    val store = Materialize.StoreDef("graft_tst_warm", "documents", "tok=1")
+    Materialize.reapStale(spark, store.prefix + "_gens", Set.empty)
+    val t = Tables(spark, dir)
+    def warmJobs(): Int = {
+      Materialize.ensureIncremental(t, store, tokensOf)
+      JobCount.of(spark)(Materialize.ensureIncremental(t, store, tokensOf))._2
+    }
+    plant(dir, "overwrite", Seq((1L, "web", "alpha beta")), files = 1)
+    val jobs = warmJobs() +: Seq(2L, 3L).map { id =>
+      plant(dir, "append", Seq((id, "web", s"gamma $id")), files = 1)
+      warmJobs()
+    }
+    val root = s"${spark.conf.get("spark.sql.warehouse.dir")}/" +
+      Materialize.incRootName(t, store)
+    assert(Generations.committed(root, "rows", conf) == Seq(0L, 1L, 2L))
+    // the newest manifest's collect; schemas are known, no other job
+    assert(jobs == Seq(1, 1, 1), s"warm ensure jobs at 1, 2, 3 generations: $jobs")
+    assert(rowSet(Materialize.ensureIncremental(t, store, tokensOf))
+      == rowSet(tokensOf(t.documents)))
+  }
+
   // incremental roots are reaped by reapStale on `<prefix>_gens`
   test("reapStaleIncremental deletes orphaned roots, keeps live ones") {
     val dirA = java.nio.file.Files.createTempDirectory("graft_incA").toString
