@@ -3,6 +3,7 @@ package graft.dedup
 import graft.Tables
 import graft.functions.VectorFunctions
 import graft.functions.Portable.{round6, round6Sql}
+import graft.storage.Bucketing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -967,12 +968,13 @@ object Dedup {
     .StoreDef("graft_simhash", "documents", s"bits=$SimhashBits|keep")
   private[graft] lazy val ShinglesBucketedStore = graft.storage.Materialize
     .StoreDef("graft_shingles_b", "documents",
-      s"sh=$ShingleSize|b=$DedupStoreBuckets")
+      s"sh=$ShingleSize|b=$DedupStoreBuckets|${Bucketing.Layout}")
   private[graft] lazy val BandsBucketedStore = graft.storage.Materialize
     .StoreDef("graft_bands_b", "documents",
-      s"sh=$ShingleSize|p=$NumPerms|nb=$NumBands|b=$DedupStoreBuckets|keep")
+      s"sh=$ShingleSize|p=$NumPerms|nb=$NumBands|b=$DedupStoreBuckets|keep|" +
+        Bucketing.Layout)
 
-  /** [[shingles]] as a BUCKETED managed table keyed by the shingle
+  /** [[shingles]] as a store BUCKETED by the shingle
     * string — the storage layout the inverted-index consumers want:
     * the doc-freq cap aggregation, the rare-shingle semi-join, and the
     * posting-list self-join all cluster on `s`, so over this store
@@ -981,18 +983,15 @@ object Dedup {
     * write, and amortized across every later query on the corpus —
     * the `storage.Bucketing` q3 pattern applied to the dedup path.
     */
-  private def shinglesBucketed(t: Tables): DataFrame = {
-    val table = s"${ShinglesBucketedStore.prefix}_${ShinglesBucketedStore.tag(t)}"
+  private def shinglesBucketed(t: Tables): DataFrame =
     // repartition on the bucket key before the bucketed write:
     // repartition and bucketBy share the Murmur3 hash, so each task
     // holds exactly one bucket's rows → ONE file per bucket, which is
     // the layout Spark trusts sortBy metadata for (multi-file buckets
     // re-sort at read)
-    graft.storage.Bucketing.ensureBucketed(
-      t.spark, shingles(t).repartition(DedupStoreBuckets, col("s")),
-      table, "s", DedupStoreBuckets)
-    t.spark.table(table)
-  }
+    graft.storage.Materialize.ensureStore(t, ShinglesBucketedStore,
+      shingles(t).repartition(DedupStoreBuckets, col("s")),
+      bucketing = Some(Bucketing.spec(DedupStoreBuckets, "s")))
 
   /** [[dedupNgramJaccard]] over the BUCKETED shingle store: identical
     * rows (same oracle SQL), but the inverted-index phase — doc-freq
@@ -1003,7 +1002,7 @@ object Dedup {
   def dedupNgramJaccardBucketed(t: Tables): DataFrame =
     dedupNgramJaccardFrom(shinglesBucketed(t), ShingleDocFreqCap)
 
-  /** The LSH band table as a BUCKETED managed table keyed by
+  /** The LSH band table as a store BUCKETED by
     * (band_idx, band_key) — exactly [[minhashCandidatesFrom]]'s
     * self-join clustering, so candidate generation over the store is
     * exchange-free (DedupSpec pins it). Bucketing on the full key pair
@@ -1016,15 +1015,12 @@ object Dedup {
     * streaming intake gate, the cluster loop's edge derivation — reads
     * 3 hashed columns.
     */
-  private[graft] def bandsBucketed(t: Tables): DataFrame = {
-    val table = s"${BandsBucketedStore.prefix}_${BandsBucketedStore.tag(t)}"
-    graft.storage.Bucketing.ensureBucketedMulti(
-      t.spark,
+  private[graft] def bandsBucketed(t: Tables): DataFrame =
+    graft.storage.Materialize.ensureStore(t, BandsBucketedStore,
       bandsFrom(keeperShinglesMaterialized(t))
         .repartition(DedupStoreBuckets, col("band_idx"), col("band_key")),
-      table, Seq("band_idx", "band_key"), DedupStoreBuckets)
-    t.spark.table(table)
-  }
+      bucketing = Some(Bucketing.spec(DedupStoreBuckets, "band_idx",
+        "band_key")))
 
   /** [[dedupMinhash]] with candidates generated over the bucketed band
     * store — exchange-free self-join; same oracle as the live entry.
@@ -1047,10 +1043,10 @@ object Dedup {
   /** Reap dedup warehouse stores orphaned by tag churn (ADVICE r7: the
     * r8 `|keep` retag left the pre-keeper `graft_shingles_keep` /
     * `graft_simhash` / `graft_bands_b` copies unreachable on disk).
-    * Parquet caches go through [[graft.storage.Materialize.reapStale]];
-    * stale BUCKETED stores are managed catalog tables, so they reap via
-    * DROP TABLE (which deletes the managed location). Returns reaped
-    * names. Run after consumers drain, never on the query path.
+    * Every store, bucketed ones included, is a warehouse dir reaped by
+    * [[graft.storage.Materialize.reapStale]], whichever JVM wrote it.
+    * Returns reaped names. Run after consumers drain, never on the
+    * query path.
     *
     * Keep-set = the live tags of `t` AND every corpus in `alsoKeep` —
     * a warehouse shared by several corpora (parallel suites, multiple
@@ -1076,7 +1072,8 @@ object Dedup {
       graft.pipeline.Mixing.LmScoresStore -> true,
       graft.pipeline.Reports.EqdBoundsStore -> true,
       graft.pipeline.Planner.KeyStatsStore -> true,
-      Substring.WindowsStore -> false)
+      Substring.WindowsStore -> false, ShinglesBucketedStore -> true,
+      BandsBucketedStore -> true, Substring.WindowsBucketedStore -> true)
     val reapedDirs = parquetStores.flatMap { case (s, live) =>
       Materialize.reapStale(t.spark, s.prefix,
         if (live) corpora.map(s.tag).toSet else Set.empty)
@@ -1086,21 +1083,7 @@ object Dedup {
         Materialize.reapStale(t.spark, s.prefix + "_gens",
           corpora.map(c => Materialize.stableTag(c, s)).toSet)
       }
-    val reapedTables = Seq(ShinglesBucketedStore, BandsBucketedStore,
-      Substring.WindowsBucketedStore)
-      .flatMap { s =>
-        val keep = corpora.map(s.tag).toSet
-        val pat = java.util.regex.Pattern.compile(
-          java.util.regex.Pattern.quote(s.prefix) + "_([0-9a-f]{12})")
-        t.spark.catalog.listTables().collect().toSeq
-          .flatMap { tb =>
-            val m = pat.matcher(tb.name)
-            if (m.matches() && !keep.contains(m.group(1))) Some(tb.name)
-            else None
-          }
-          .map { name => t.spark.sql(s"DROP TABLE IF EXISTS `$name`"); name }
-      }
-    reapedDirs ++ reapedIncRoots ++ reapedTables
+    reapedDirs ++ reapedIncRoots
   }
 
   private def dedupMinhashVerifiedFrom(shAll: DataFrame): DataFrame =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Portable
+import graft.storage.Bucketing
 
 /** Exact SUBSTRING dedup — the span-level dedup mode (Lee et al. 2021,
   * "Deduplicating Training Data Makes Language Models Better"): find
@@ -198,7 +199,7 @@ object Substring {
   def substringSpansMat(t: Tables): DataFrame =
     spansOver(windowsFor(t, SpanK), SpanK)
 
-  /** The window store as a BUCKETED managed table keyed by the window
+  /** The window store BUCKETED by the window
     * hash — exactly the clustering the dup aggregation AND the flagged
     * semi-join shuffle on, so over this store both run with ZERO
     * exchange (SubstringSpec pins no `Exchange hashpartitioning(h`);
@@ -211,18 +212,13 @@ object Substring {
     */
   private[graft] lazy val WindowsBucketedStore = graft.storage.Materialize
     .StoreDef("graft_substr_wins_b", "documents",
-      s"k=$SpanK|b=${Dedup.DedupStoreBuckets}")
+      s"k=$SpanK|b=${Dedup.DedupStoreBuckets}|${Bucketing.Layout}")
 
-  private def windowsBucketed(t: Tables): DataFrame = {
-    val table =
-      s"${WindowsBucketedStore.prefix}_${WindowsBucketedStore.tag(t)}"
-    graft.storage.Bucketing.ensureBucketed(
-      t.spark,
+  private def windowsBucketed(t: Tables): DataFrame =
+    graft.storage.Materialize.ensureStore(t, WindowsBucketedStore,
       windows(t.documents, SpanK)
         .repartition(Dedup.DedupStoreBuckets, col("h")),
-      table, "h", Dedup.DedupStoreBuckets)
-    t.spark.table(table)
-  }
+      bucketing = Some(Bucketing.spec(Dedup.DedupStoreBuckets, "h")))
 
   /** [[substringSpans]] over the bucketed store: identical rows (oracle
     * = the live SQL verbatim), hash-clustered phases exchange-free.

@@ -175,17 +175,12 @@ object Maintenance {
     * landing, not in every merge.
     */
   def corpusRefreshMergeBucketed(t: Tables): DataFrame = {
-    import graft.storage.{Bucketing, Materialize}
-    val bTable = s"graft_b_mergebase_${Materialize.corpusTag(
-      t, "documents", s"merge|b=${Bucketing.Q3Buckets}")}"
-    val rTable = s"graft_b_mergeref_${Materialize.corpusTag(
-      t, "documents", s"merge|r|b=${Bucketing.Q3Buckets}")}"
+    import graft.storage.Bucketing.ensureByKey
     val (base, refresh) = refreshFrames(t)
-    Bucketing.ensureBucketed(t.spark, base, bTable, "doc_id",
-      Bucketing.Q3Buckets)
-    Bucketing.ensureBucketed(t.spark, refresh, rTable, "doc_id",
-      Bucketing.Q3Buckets)
-    mergeBody(t.spark.table(bTable), t.spark.table(rTable))
+    mergeBody(
+      ensureByKey(t, "graft_b_mergebase", "documents", "merge", base, "doc_id"),
+      ensureByKey(t, "graft_b_mergeref", "documents", "merge|r", refresh,
+        "doc_id"))
   }
 
   def corpusRefreshMergeSql: String =

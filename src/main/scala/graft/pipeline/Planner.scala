@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
+import graft.storage.Bucketing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -411,11 +412,11 @@ object Planner {
   }
 
   /** EXECUTE the layout advisor's verdict for one (table, column):
-    * `bucket-by` → a bucketed catalog table via
-    * `storage.Bucketing.ensureBucketed` with the advised bucket
-    * count; `partition-by` → a directory-partitioned parquet write
-    * under the warehouse. Returns the written identifier (catalog
-    * table name or path) — what the statistics chose is what lands
+    * `bucket-by` → a store bucketed by the column into the advised
+    * bucket count; `partition-by` → a directory-partitioned store.
+    * Both land under the warehouse through the one store ensure
+    * ([[graft.storage.Materialize.ensureParquetAt]]), and the call
+    * returns the store's path — what the statistics chose is what lands
     * on disk, closing the layout loop the same way [[applyDecision]]
     * closes the join loop. Idempotent per corpus tag (the ensure
     * protocol); the landed layout is keyed on the ADVISED TABLE's own
@@ -439,26 +440,22 @@ object Planner {
     // must re-land the layout instead of serving the previously landed
     // bytes under the old verdict (ADVICE r16)
     val tag = graft.storage.Materialize.corpusTag(t, table,
-      s"layout=$column|d=$decision|nb=$nBuckets")
+      s"layout=$column|d=$decision|nb=$nBuckets|${Bucketing.Layout}")
     def df = table match {
       case "lineitem" => t.lineitem case "orders" => t.orders
       case "customer" => t.customer case "part" => t.part
       case "supplier" => t.supplier case "nation" => t.nation
       case "region" => t.region
     }
-    if (decision == "bucket-by") {
-      val name = s"graft_adv_${table}_${column}_$tag"
-      graft.storage.Bucketing.ensureBucketed(
-        t.spark, df, name, column, nBuckets.toInt)
-      name
-    } else {
-      val wh = t.spark.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/")
-      val path = s"$wh/graft_adv_${table}_${column}_$tag"
-      // SaveMode.Ignore = the ensure protocol: existing layout wins
-      df.write.mode("ignore").partitionBy(column).parquet(path)
-      path
-    }
+    val path = new org.apache.hadoop.fs.Path(
+      t.spark.conf.get("spark.sql.warehouse.dir"),
+      s"graft_adv_${table}_${column}_$tag")
+    val bucket = decision == "bucket-by"
+    graft.storage.Materialize.ensureParquetAt(t.spark, path, df,
+      partitionCols = if (bucket) Nil else Seq(column),
+      bucketing =
+        if (bucket) Some(Bucketing.spec(nBuckets.toInt, column)) else None)
+    path.toString
   }
 
   /** A three-table equi-join chain A ⋈ B ⋈ C (B the shared middle:

@@ -1,7 +1,8 @@
 package graft.storage
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 
 /** Bucketed-storage path for repeated co-located joins.
   *
@@ -10,115 +11,66 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * dominant cost. Writing both tables bucketed (and sorted) by the join
   * key makes every later join a zero-exchange sort-merge: Spark matches
   * bucket files pairwise per task. The shuffle is paid once, at write.
+  *
+  * A bucketed store is a [[Materialize]] store like any other: written
+  * into a temp dir and committed by one rename, then read back from its
+  * directory with the store's [[BucketSpec]]. No catalog is involved, so
+  * a later JVM over the same warehouse reuses the store.
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, sorted managed table. `buckets` should be
-    * sized so one bucket of the LARGER table fits an executor's memory
-    * at target scale (e.g. 100 TB / 4096 buckets ≈ 25 GB splits, each
-    * read as multiple file splits but one bucket per join task).
+  /** Folded into every bucketed store's config: a directory written as a
+    * catalog table's location by an earlier layout, possibly half-written
+    * in place, never matches a current tag. It is never served, and
+    * [[Materialize.reapStale]] deletes it.
     */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
+  val Layout = "layout=dir"
 
-  /** Join two same-bucketed tables on their bucket key — produces a
-    * SortMergeJoin with NO Exchange on either side (pinned by
-    * BucketingSpec).
+  /** Bucket AND sort by `cols`. The bucket columns must exactly match the
+    * consumer's clustering: Spark's bucketed-scan heuristic does not
+    * credit subset-key bucketings. `buckets` should be sized so one
+    * bucket of the LARGER table fits an executor's memory at target
+    * scale (e.g. 100 TB / 4096 buckets ≈ 25 GB, read as multiple file
+    * splits but one bucket per join task).
     */
-  def coLocatedJoin(spark: org.apache.spark.sql.SparkSession,
-                    leftTable: String, rightTable: String,
-                    leftKey: String, rightKey: String): DataFrame = {
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey))
-  }
+  def spec(buckets: Int, cols: String*): BucketSpec =
+    BucketSpec(buckets, cols, cols)
 
   /** Buckets for the q3 fact tables. Local-scale value; at 100 TB size
     * so one bucket of lineitem fits an executor (~4096).
     */
   val Q3Buckets = 8
 
-  /** [[writeBucketed]] for a composite bucket key: bucket AND sort by
-    * the full column list (bucket columns must exactly match the
-    * consumer's clustering — Spark's bucketed-scan heuristic does not
-    * credit subset-key bucketings).
+  /** `df` as the store `<prefix>_<tag>`, bucketed and sorted by `key`
+    * into [[Q3Buckets]]; the tag hashes `table`'s file inventory and
+    * `config`.
     */
-  def writeBucketedMulti(df: DataFrame, table: String, keys: Seq[String],
-                         buckets: Int): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** [[ensureBucketed]] for a composite bucket key. */
-  def ensureBucketedMulti(spark: SparkSession, df: => DataFrame,
-                          table: String, keys: Seq[String],
-                          buckets: Int): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      clearLeftoverLocation(spark, table)
-      writeBucketedMulti(df, table, keys, buckets)
-    }
-
-  private def clearLeftoverLocation(spark: SparkSession,
-                                    table: String): Unit = {
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(loc)
-    }
-  }
-
-  /** Write `df` bucketed as `table` unless this session's catalog
-    * already has it. A fresh session starts with an empty in-memory
-    * catalog while the warehouse FILES persist, so a leftover location
-    * from a previous run is removed first (Spark refuses to create a
-    * managed table over a non-empty location).
-    */
-  def ensureBucketed(spark: SparkSession, df: => DataFrame, table: String,
-                     key: String, buckets: Int): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      clearLeftoverLocation(spark, table)
-      writeBucketed(df, table, key, buckets)
-    }
+  private[graft] def ensureByKey(t: Tables, prefix: String, table: String,
+                                 config: String, df: => DataFrame,
+                                 key: String): DataFrame =
+    Materialize.ensureParquet(t.spark, prefix, Materialize.corpusTag(
+      t, table, s"$config|b=$Q3Buckets|$Layout"), df,
+      bucketing = Some(spec(Q3Buckets, key)))
 
   /** TPC-H Q3 over pre-bucketed facts: lineitem and orders are written
-    * bucketed+sorted by their order key ONCE (first call per source dir
-    * per session tag), and the fact-fact join then runs with zero
-    * exchanges — the shuffle is amortized across every subsequent query
-    * on the same corpus. Same plan body as Relational.q3Shipping
-    * (one definition, cannot drift); BucketingSpec pins the no-Exchange
-    * property, the DuckDB oracle (identical to q3_shipping's) pins
-    * values.
+    * bucketed+sorted by their order key ONCE per source file inventory,
+    * and the fact-fact join then runs with zero exchanges — the shuffle
+    * is amortized across every subsequent query on the same corpus.
+    * Same plan body as Relational.q3Shipping (one definition, cannot
+    * drift); BucketingSpec pins the no-Exchange property, the DuckDB
+    * oracle (identical to q3_shipping's) pins values.
     */
-  def q3Bucketed(t: Tables): DataFrame = {
-    // Inventory-keyed cache tags (Materialize.corpusTag hashes the
-    // source table's file names + lengths + mtimes, not just the path):
-    // a corpus regenerated at the same path mid-session produces NEW
-    // bucketed tables instead of silently serving stale buckets — the
-    // staleness mode the dedup/ANN stores already guard against.
-    val lTable = s"graft_b_lineitem_${Materialize.corpusTag(
-      t, "lineitem", s"q3|b=$Q3Buckets")}"
-    val oTable = s"graft_b_orders_${Materialize.corpusTag(
-      t, "orders", s"q3|b=$Q3Buckets")}"
-    ensureBucketed(t.spark,
-      t.lineitem.select("l_orderkey", "l_shipdate", "l_extendedprice",
-        "l_discount"),
-      lTable, "l_orderkey", Q3Buckets)
-    ensureBucketed(t.spark,
-      t.orders.select("o_orderkey", "o_custkey", "o_orderdate"),
-      oTable, "o_orderkey", Q3Buckets)
+  def q3Bucketed(t: Tables): DataFrame =
+    // Inventory-keyed tags (Materialize.corpusTag hashes the source
+    // table's file names + lengths + mtimes, not just the path): a corpus
+    // regenerated at the same path mid-session produces NEW bucketed
+    // stores instead of silently serving stale buckets.
     graft.operators.Relational.q3Body(
-      t.spark.table(lTable), t.spark.table(oTable), t.customer)
-  }
+      ensureByKey(t, "graft_b_lineitem", "lineitem", "q3",
+        t.lineitem.select("l_orderkey", "l_shipdate", "l_extendedprice",
+          "l_discount"), "l_orderkey"),
+      ensureByKey(t, "graft_b_orders", "orders", "q3",
+        t.orders.select("o_orderkey", "o_custkey", "o_orderdate"),
+        "o_orderkey"),
+      t.customer)
 }

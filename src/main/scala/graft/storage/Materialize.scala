@@ -2,7 +2,9 @@ package graft.storage
 
 import graft.Tables
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
 
 /** Shared ensure-write machinery for per-corpus warehouse caches (the
   * materialized shingle store, the persisted IVF index, ...).
@@ -44,8 +46,9 @@ object Materialize {
 
   /** [[ensureParquet]] addressed by a [[StoreDef]]. */
   def ensureStore(t: Tables, s: StoreDef, df: => DataFrame,
-                  partitionCols: Seq[String] = Nil): DataFrame =
-    ensureParquet(t.spark, s.prefix, s.tag(t), df, partitionCols)
+                  partitionCols: Seq[String] = Nil,
+                  bucketing: Option[BucketSpec] = None): DataFrame =
+    ensureParquet(t.spark, s.prefix, s.tag(t), df, partitionCols, bucketing)
 
   /** Cache tag for `table` under `t.dir` given `config` (constants the
     * cached content depends on — bake in everything that changes the
@@ -145,15 +148,32 @@ object Materialize {
   private def keyOf(f: FileStatus): FileKey =
     (f.getPath.getName, f.getLen, f.getModificationTime)
 
+  // each manifest read so far, keyed by the listing of its inventory
+  // artifact: part-file names carry a per-write UUID, so a root reaped
+  // and rebuilt at the same path lists differently and is read again
+  private val manifests =
+    ParquetRead.lru[Seq[(String, Long, Long)], (Seq[FileKey], Long)]()
+
   /** Generation `n`'s manifest: the file inventory it covers, and the
     * generation its read chain starts at (`n` itself for a base).
+    * Committed generations are immutable, so a warm ensure that finds
+    * the listing unchanged reads it from memory and runs no job.
     */
   private def manifest(spark: SparkSession, root: String,
                        n: Long): (Seq[FileKey], Long) = {
-    val rows = ParquetRead(spark, Generations.path(root, n, InvArtifact))
-      .select("file", "len", "mtime", "base_gen").collect().toSeq
-    (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
-      rows.headOption.fold(n)(_.getLong(3)))
+    val inv = new Path(Generations.path(root, n, InvArtifact))
+    val listing = inv.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(inv).toSeq
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
+    Option(manifests.synchronized(manifests.get(listing))).getOrElse {
+      val rows = ParquetRead(spark, inv.toString)
+        .select("file", "len", "mtime", "base_gen").collect().toSeq
+      val m = (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
+        rows.headOption.fold(n)(_.getLong(3)))
+      manifests.synchronized(manifests.put(listing, m))
+      m
+    }
   }
 
   /** One read of the committed `gens` from `since` on: a read chain. */
@@ -382,41 +402,67 @@ object Materialize {
 
   /** Write `df` as parquet under the session warehouse at
     * `<prefix>_<tag>` unless already present; return the read-back
-    * frame. `partitionCols` forwards to `partitionBy`.
+    * frame. `partitionCols` forwards to `partitionBy`; `bucketing` is the
+    * store's bucket layout, see [[ensureParquetAt]].
     *
     * Publication is [[Generations.commitOnce]] — write to a temp dir,
     * one exclusive rename — so concurrent callers sharing one warehouse
-    * (parallel suites, bench + test) never observe a partially-written
-    * cache dir: either this caller's rename lands the complete
-    * directory, or another caller's already did and this one serves it.
+    * (parallel suites, bench + test, another JVM) never observe a
+    * partially-written cache dir: either this caller's rename lands the
+    * complete directory, or another caller's already did and this one
+    * serves it.
     */
   def ensureParquet(spark: SparkSession, prefix: String, tag: String,
                     df: => DataFrame,
-                    partitionCols: Seq[String] = Nil): DataFrame =
+                    partitionCols: Seq[String] = Nil,
+                    bucketing: Option[BucketSpec] = None): DataFrame =
     ensureParquetAt(spark, new Path(
       new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${prefix}_$tag"),
-      df, partitionCols)
+      df, partitionCols, bucketing)
 
   /** [[ensureParquet]] at an explicit destination path — for stores
     * whose layout is not `<warehouse>/<prefix>_<tag>` (e.g. the eval
     * corpus dir, which must look like a testdata dir:
     * `<root>/documents.parquet`). Same publication. A `dst` that exists
-    * without `_SUCCESS` (a partial delete) is no store: the call throws
-    * rather than serve it.
+    * without `_SUCCESS` (a partial delete, a crashed in-place write) is
+    * no store: the call throws rather than serve it.
+    *
+    * A `bucketing` layout writes `df` bucketed and sorted as `bucketBy` /
+    * `sortBy` would (file names carry the bucket id), and reads the
+    * directory back as a relation with that spec, so joins and
+    * aggregations on the bucket columns plan without an exchange. The
+    * layout lives in the caller, not in a catalog: the store is its
+    * directory, and any JVM reuses it.
     */
   private[graft] def ensureParquetAt(spark: SparkSession, dst: Path,
                                      df: => DataFrame,
-                                     partitionCols: Seq[String] = Nil): DataFrame = {
+                                     partitionCols: Seq[String] = Nil,
+                                     bucketing: Option[BucketSpec] = None): DataFrame = {
     val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
     val done = new Path(dst, "_SUCCESS")
     if (!fs.exists(done) && !Generations.commitOnce(fs, dst) { tmp =>
-          val w = df.write.mode("overwrite")
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(tmp.toString)
+          val write = DataSource(spark, "parquet",
+            partitionColumns = partitionCols, bucketSpec = bucketing,
+            options = Map("path" -> tmp.toString))
+            .planForWriting(SaveMode.ErrorIfExists, df.queryExecution.analyzed)
+          spark.sessionState.executePlan(write).assertCommandExecuted()
         } && !fs.exists(done))
       throw new java.io.IOException(
         s"$dst exists without _SUCCESS and no writer committed it — " +
           "refusing to serve a partial store (delete it to rebuild)")
-    ParquetRead(spark, dst.toString)
+    // a bucketed or partitioned write of no rows leaves no data file,
+    // and no schema can be inferred from none: read such a store with
+    // the frame's schema
+    val read =
+      if (fs.listStatus(dst).exists(f => !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))) ParquetRead(spark, dst.toString)
+      else spark.read.schema(df.schema).parquet(dst.toString)
+    bucketing.fold(read) { spec =>
+      val rel = read.queryExecution.analyzed.collectFirst {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      }.get
+      spark.baseRelationToDataFrame(
+        rel.copy(bucketSpec = Some(spec))(rel.sparkSession))
+    }
   }
 }

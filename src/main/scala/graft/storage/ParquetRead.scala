@@ -33,17 +33,18 @@ object ParquetRead {
   private final case class Inferred(conf: Map[String, String],
                                     inventory: Inventory, schema: StructType)
 
-  // one entry per path set; beyond this many, the least recently read
-  // path set is forgotten (a long-lived session reads ever newer
-  // generation paths, and a forgotten set just re-infers)
-  private val MaxPathSets = 256
-
-  private val memo =
-    new java.util.LinkedHashMap[Seq[String], Inferred](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Seq[String], Inferred]): Boolean =
-        size > MaxPathSets
+  /** A map that forgets its least recently used entry beyond 256
+    * entries; callers synchronize on it. A long-lived session reads ever
+    * newer generation paths, and a forgotten entry is just recomputed.
+    */
+  private[storage] def lru[K, V](): java.util.Map[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size > 256
     }
+
+  // one entry per path set
+  private val memo = lru[Seq[String], Inferred]()
 
   def apply(spark: SparkSession, paths: String*): DataFrame =
     inventory(spark, paths) match {

@@ -1,37 +1,34 @@
 package graft
 
-import graft.storage.Bucketing
+import graft.storage.{Bucketing, Materialize}
 import graft.functions.Salting
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class BucketingSpec extends SparkSpec {
 
-  private def dropTable(name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    // a crashed prior run can leave the location without the metadata
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(loc)
-    }
+  private def dropStore(name: String): Unit = {
+    val dir = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+  }
+
+  private def physical(df: DataFrame): String = {
+    df.collect() // finalize AQE
+    df.queryExecution.executedPlan.toString
   }
 
   test("bucketed tables join with zero exchanges") {
-    dropTable("b_orders")
-    dropTable("b_lineitem")
-    Bucketing.writeBucketed(
-      tables.orders.select("o_orderkey", "o_custkey"),
-      "b_orders", "o_orderkey", 4)
-    Bucketing.writeBucketed(
-      tables.lineitem.select("l_orderkey", "l_quantity"),
-      "b_lineitem", "l_orderkey", 4)
-    val joined = Bucketing.coLocatedJoin(spark,
-      "b_lineitem", "b_orders", "l_orderkey", "o_orderkey")
-    joined.collect() // finalize AQE
-    val plan = joined.queryExecution.executedPlan.toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-colocated").toString
+    def store(name: String, df: DataFrame, key: String): DataFrame =
+      Materialize.ensureParquetAt(spark, new Path(dir, name), df,
+        bucketing = Some(Bucketing.spec(4, key)))
+    val l = store("b_lineitem",
+      tables.lineitem.select("l_orderkey", "l_quantity"), "l_orderkey")
+    val r = store("b_orders",
+      tables.orders.select("o_orderkey", "o_custkey"), "o_orderkey")
+    val joined = l.join(r, l("l_orderkey") === r("o_orderkey"))
+    val plan = physical(joined)
     assert(!plan.contains("Exchange hashpartitioning"),
       s"co-located join must not shuffle:\n$plan")
     // and it is the same row count as the shuffled join
@@ -41,11 +38,11 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("q3_bucketed: zero exchanges, same rows as q3_shipping") {
-    // clean slate so the entry's own ensureBucketed path is exercised
-    dropTable("graft_b_lineitem_" + graft.storage.Materialize.corpusTag(
-      tables, "lineitem", s"q3|b=${Bucketing.Q3Buckets}"))
-    dropTable("graft_b_orders_" + graft.storage.Materialize.corpusTag(
-      tables, "orders", s"q3|b=${Bucketing.Q3Buckets}"))
+    // clean slate so the entry's own store build is exercised
+    dropStore("graft_b_lineitem_" + Materialize.corpusTag(tables, "lineitem",
+      s"q3|b=${Bucketing.Q3Buckets}|${Bucketing.Layout}"))
+    dropStore("graft_b_orders_" + Materialize.corpusTag(tables, "orders",
+      s"q3|b=${Bucketing.Q3Buckets}|${Bucketing.Layout}"))
     val df = Bucketing.q3Bucketed(tables)
     val got = df.collect().map(_.toSeq).toSeq
     val plan = df.queryExecution.executedPlan.toString
@@ -56,9 +53,56 @@ class BucketingSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("a built bucketed store is reused from its directory: no job, no exchange, no catalog table") {
+    val dst = new Path(
+      java.nio.file.Files.createTempDirectory("graft-bkt-reuse").toString, "orders_b")
+    val plain = tables.orders.select("o_orderkey", "o_custkey")
+    def ensure(df: => DataFrame): DataFrame = Materialize.ensureParquetAt(
+      spark, dst, df, bucketing = Some(Bucketing.spec(4, "o_orderkey")))
+    ensure(plain)
+    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
+    def files: Set[(String, Long)] = fs.listStatus(dst)
+      .map(s => (s.getPath.getName, s.getModificationTime)).toSet
+    val built = files
+    val (reused, jobs) = JobCount.of(spark)(
+      ensure(throw new IllegalStateException("a hit must not force the frame")))
+    assert(jobs == 0, s"a hit on a built bucketed store launched $jobs jobs")
+    assert(files == built, "a hit rewrote the store")
+    // an aggregation on the bucket key needs no exchange over the store,
+    // and does over the same rows unbucketed
+    def perKey(df: DataFrame): DataFrame = df.groupBy("o_orderkey").count()
+    val plan = physical(perKey(reused))
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"aggregation on the bucket key must not shuffle:\n$plan")
+    assert(physical(perKey(plain)).contains("Exchange hashpartitioning"))
+    assert(perKey(reused).collect().toSet == perKey(plain).collect().toSet)
+
+    // a store of no rows has no data file to infer a schema from: built
+    // and hit, it reads back empty with the frame's schema
+    val empty = plain.filter(col("o_orderkey") < 0)
+    val emptyDst = new Path(dst.getParent, "empty_b")
+    def ensureEmpty(): DataFrame = Materialize.ensureParquetAt(spark, emptyDst,
+      empty, bucketing = Some(Bucketing.spec(4, "o_orderkey")))
+    Seq(ensureEmpty(), ensureEmpty()).foreach { df =>
+      assert(df.count() == 0 && df.schema.map(f => (f.name, f.dataType)) ==
+        empty.schema.map(f => (f.name, f.dataType)))
+    }
+
+    // every bucketed store graft builds: none of them is a catalog table
+    Bucketing.q3Bucketed(tables).collect()
+    graft.pipeline.Maintenance.corpusRefreshMergeBucketed(tables).collect()
+    graft.dedup.Dedup.dedupNgramJaccardBucketed(tables).collect()
+    graft.dedup.Dedup.dedupMinhashBucketed(tables).collect()
+    graft.dedup.Substring.substringSpansBucketed(tables).collect()
+    // temporary views (streaming memory sinks of other suites) are not
+    // catalog tables
+    val catalogTables = spark.catalog.listTables().collect().filterNot(_.isTemporary)
+    assert(catalogTables.isEmpty, catalogTables.mkString(", "))
+  }
+
   test("q3_bucketed cache tag tracks the source file inventory, not the path") {
     // A corpus REGENERATED at the same path must produce new bucketed
-    // tables — a path-keyed tag would silently serve the stale buckets
+    // stores — a path-keyed tag would silently serve the stale buckets
     // (the staleness mode Materialize.corpusTag exists to close).
     val dir = java.nio.file.Files.createTempDirectory("graft_q3stale").toString
     Seq("lineitem", "orders", "customer").foreach { tb =>
@@ -66,18 +110,20 @@ class BucketingSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/$tb.parquet")
     }
     val t = Tables(spark, dir)
-    def lineitemTables(p: String): Set[String] =
-      "graft_b_lineitem_[0-9a-f]+".r.findAllIn(p).toSet
+    // the lineitem stores a frame reads, from its scanned files (a plan
+    // string abbreviates long locations)
+    def lineitemTables(df: DataFrame): Set[String] =
+      "graft_b_lineitem_[0-9a-f]{12}".r.findAllIn(df.inputFiles.mkString(" ")).toSet
     val r1 = Bucketing.q3Bucketed(t)
     r1.collect()
-    val tables1 = lineitemTables(r1.queryExecution.executedPlan.toString)
+    val tables1 = lineitemTables(r1)
     assert(tables1.size == 1)
     // regenerate lineitem at the SAME path: same rows, new file inventory
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val r2 = Bucketing.q3Bucketed(t)
     val got = r2.collect().map(_.toSeq).toSeq
-    val tables2 = lineitemTables(r2.queryExecution.executedPlan.toString)
+    val tables2 = lineitemTables(r2)
     assert(tables2.size == 1)
     assert(tables1 != tables2,
       s"stale bucketed table $tables1 served after source rewrite")

@@ -781,24 +781,26 @@ class DedupSpec extends SparkSpec {
   // from `tables`' corpus as stale, including stores earlier tests
   // built for their temp corpora (they rebuild on demand — ensure-write)
   test("reapStaleStores drops orphaned tags, keeps the live corpus stores") {
-    import org.apache.spark.sql.functions.col
     // build (or reuse) the live stores, then remember a result
     val before = Dedup.dedupMinhashVerifiedMat(tables).collect().map(_.toSeq).toSeq
     Dedup.dedupMinhashBucketed(tables).collect() // ensures graft_bands_b
     val wh = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    // plant orphans: a stale parquet cache dir and a stale bucketed table
-    val staleDir = new java.io.File(wh, "graft_shingles_keep_000000000000")
-    staleDir.mkdirs()
-    new java.io.File(staleDir, "_SUCCESS").createNewFile()
-    spark.sql("DROP TABLE IF EXISTS graft_bands_b_000000000000")
-    spark.range(1).select(col("id")).write
-      .saveAsTable("graft_bands_b_000000000000")
+    // plant orphans: a stale parquet cache dir and a stale bucketed
+    // store, each committed (as an earlier JVM leaves them)
+    def plant(name: String): java.io.File = {
+      val d = new java.io.File(wh, name)
+      d.mkdirs()
+      new java.io.File(d, "_SUCCESS").createNewFile()
+      d
+    }
+    val staleDir = plant("graft_shingles_keep_000000000000")
+    val staleBands = plant("graft_bands_b_000000000000")
     val reaped = Dedup.reapStaleStores(tables)
     assert(reaped.contains("graft_shingles_keep_000000000000"), reaped.toString)
     assert(reaped.contains("graft_bands_b_000000000000"), reaped.toString)
     assert(!staleDir.exists())
-    assert(!spark.catalog.tableExists("graft_bands_b_000000000000"))
+    assert(!staleBands.exists())
     // live stores survived: the store-backed query still answers, and a
     // second reap finds nothing of the live corpus to delete
     val after = Dedup.dedupMinhashVerifiedMat(tables).collect().map(_.toSeq).toSeq

@@ -2,6 +2,8 @@ package graft
 
 import graft.pipeline.{Planner, Reports}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 /** The ANALYZE-consumer: statistics → join-strategy decision → the
@@ -174,12 +176,38 @@ class PlannerSpec extends SparkSpec {
       "partition-by verdict must produce value directories")
     assert(spark.read.parquet(pPath).count() == 40000L)
     val tName = Planner.applyLayout(t, "orders", "o_orderkey")
-    assert(spark.catalog.tableExists(tName),
-      "bucket-by verdict must produce a bucketed catalog table")
-    assert(spark.table(tName).count() == 40000L)
+    // the bucket-by verdict lands bucketed into the advised count: every
+    // data file carries its bucket id, and the store reads back (a hit,
+    // nothing rebuilt) as a relation with that bucket spec
+    val nBuckets = Planner.partitionAdvisor(t).collect()
+      .find(r => r.getString(0) == "orders" && r.getString(1) == "o_orderkey")
+      .get.getLong(7).toInt
+    val spec = BucketSpec(nBuckets, Seq("o_orderkey"), Seq("o_orderkey"))
+    val bucketIds = fs.listStatus(new Path(tName)).map(_.getPath.getName)
+      .filterNot(_.startsWith("_")).map(BucketingUtils.getBucketId)
+    assert(bucketIds.nonEmpty && bucketIds.forall(_.exists(_ < nBuckets)),
+      s"bucket-by verdict must produce $nBuckets-bucket files: ${bucketIds.toSeq}")
+    val bucketed = graft.storage.Materialize.ensureParquetAt(spark,
+      new Path(tName), fail("a landed layout must not be rebuilt"),
+      bucketing = Some(spec))
+    assert(bucketed.count() == 40000L)
+    val perKey = bucketed.groupBy("o_orderkey").count()
+    perKey.collect()
+    assert(!physical(perKey).contains("Exchange hashpartitioning"),
+      s"the bucketed layout must serve a per-key aggregation unshuffled:\n${physical(perKey)}")
     // ensure protocol: re-apply is a no-op returning the same identity
     assert(Planner.applyLayout(t, "orders", "o_custkey") == pPath)
     assert(Planner.applyLayout(t, "orders", "o_orderkey") == tName)
+    // a write that crashed at the partition-by path left its dir
+    // without _SUCCESS: the layout is refused, not served
+    fs.delete(new Path(pPath, "_SUCCESS"), false)
+    fs.mkdirs(new Path(pPath, "_temporary"))
+    val e = intercept[java.io.IOException](
+      Planner.applyLayout(t, "orders", "o_custkey"))
+    assert(e.getMessage.contains("_SUCCESS"), e.getMessage)
+    fs.delete(new Path(pPath), true)
+    assert(Planner.applyLayout(t, "orders", "o_custkey") == pPath)
+    assert(spark.read.parquet(pPath).count() == 40000L)
   }
 
   test("plan_join_order ≡ JVM stats model; both verdicts occur; the executed tree joins the chosen pair first") {
@@ -285,7 +313,7 @@ class PlannerSpec extends SparkSpec {
     val ordersLay2 = Planner.applyLayout(t2, "orders", "o_orderkey")
     assert(ordersLay2 != ordersLay1,
       "orders layout must re-land under the regenerated inventory")
-    assert(spark.table(ordersLay2).count() == 1500L)
+    assert(spark.read.parquet(ordersLay2).count() == 1500L)
     // an untouched table's layout identity is stable across the churn
     assert(Planner.applyLayout(t2, "customer", "c_custkey") == custLay1,
       "customer layout must not retag on an orders-only change")

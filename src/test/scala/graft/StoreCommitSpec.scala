@@ -1,9 +1,10 @@
 package graft
 
 import graft.ann.Ann
-import graft.storage.{BoundsStore, ClusterStore, IndexMaintenance, Materialize}
+import graft.storage.{BoundsStore, Bucketing, ClusterStore, IndexMaintenance, Materialize}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
@@ -14,9 +15,9 @@ import scala.util.{Failure, Try}
   * publishers to one generation root get distinct generations, each
   * holding exactly one writer's rows; a reader pinned before them keeps
   * its rows; a publish whose task dies mid-write commits nothing and
-  * leaves nothing; concurrent `ensureParquet` callers all serve one
-  * winner; and a store dir left without `_SUCCESS` is refused, not
-  * served.
+  * leaves nothing; concurrent `ensureParquet` callers, of a plain or a
+  * bucketed store, all serve one winner; and a store dir left without
+  * `_SUCCESS` is refused, not served.
   */
 class StoreCommitSpec extends SparkSpec {
 
@@ -134,23 +135,34 @@ class StoreCommitSpec extends SparkSpec {
   test("concurrent ensureParquet callers all serve one winner; a dying build commits nothing") {
     import spark.implicits._
     val prefix = "graft_tst_commit"
-    Materialize.reapStale(spark, prefix, Set.empty)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     def rows(w: Int): DataFrame = (0 until 300).map(i => (w, i)).toDF("w", "i")
     def tag(): String = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     def temps(): Set[String] = listing(wh).filter(_.startsWith(s".${prefix}_"))
+    def stores(): Set[String] = listing(wh).filter(_.startsWith(s"${prefix}_"))
 
-    val tag0 = tag()
-    val served = race(w => sorted(Materialize.ensureParquet(spark, prefix, tag0, rows(w))))
-    assert(served.distinct.size == 1, "ensureParquet callers served different stores")
-    assert((0 until Writers).exists(w => sorted(rows(w)) == served.head),
-      "the served store is no single writer's rows")
-    assert(temps().isEmpty, s"race losers left temp dirs: ${temps()}")
+    // a plain store and a bucketed one commit the same way
+    Seq(None, Some(Bucketing.spec(4, "i"))).foreach { bucketing =>
+      Materialize.reapStale(spark, prefix, Set.empty)
+      val tag0 = tag()
+      val served = race(w => sorted(
+        Materialize.ensureParquet(spark, prefix, tag0, rows(w), bucketing = bucketing)))
+      assert(served.distinct.size == 1, s"$bucketing: callers served different stores")
+      assert((0 until Writers).exists(w => sorted(rows(w)) == served.head),
+        s"$bucketing: the served store is no single writer's rows")
+      assert(stores() == Set(s"${prefix}_$tag0") && temps().isEmpty,
+        s"$bucketing: the race left ${stores()} and temp dirs ${temps()}")
+      // the committed files carry a bucket id iff the store is bucketed
+      val data = listing(s"$wh/${prefix}_$tag0").filterNot(_.startsWith("_"))
+      assert(data.nonEmpty && data.forall(f =>
+        BucketingUtils.getBucketId(f).isDefined == bucketing.isDefined), data)
 
-    val tag1 = tag()
-    intercept[Exception](Materialize.ensureParquet(spark, prefix, tag1, dying(rows(0))))
-    assert(!listing(wh).contains(s"${prefix}_$tag1") && temps().isEmpty,
-      "a build that died mid-write left a store or a temp dir")
+      val tag1 = tag()
+      intercept[Exception](Materialize.ensureParquet(spark, prefix, tag1,
+        dying(rows(0)), bucketing = bucketing))
+      assert(!listing(wh).contains(s"${prefix}_$tag1") && temps().isEmpty,
+        s"$bucketing: a build that died mid-write left a store or a temp dir")
+    }
     Materialize.reapStale(spark, prefix, Set.empty)
   }
 
