@@ -36,23 +36,18 @@ object Ann {
   val BucketTarget = 256
   val NumTables = 4 // multiprobe: hash tables over disjoint dim slices
 
-  private val lshBitsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   /** Adaptive ANN bucket width — [[Portable.bucketBits]]' integer
     * ladder (identical thresholds to the SQL twin in the oracles) over
-    * one memoized metadata-only count per corpus state. Keyed on the
-    * file-inventory tag, not the Tables value, so a regenerated or
-    * appended corpus re-derives the width instead of serving a stale
-    * literal against a fresher oracle (ADVICE r8; `Dedup.embedBits`
-    * has the full rationale).
+    * one metadata-only count, kept in [[graft.storage.PlanStats]]
+    * under the embeddings' inventory tag with the ladder's constants as
+    * config: a landing or new constants derive it again (ADVICE r8;
+    * `Dedup.embedBits` has the full rationale).
     */
   private def lshBits(t: Tables): Int =
-    lshBitsCache.computeIfAbsent(
-      graft.storage.Materialize.corpusTag(t, "embeddings",
-        s"bits=$BucketBits..$BucketBitsMax|tgt=$BucketTarget"),
-      _ => Portable.bucketBits(t.embeddings.count(),
-        BucketBits, BucketBitsMax, BucketTarget)).intValue
+    graft.storage.PlanStats(graft.storage.Materialize.corpusTag(t, "embeddings",
+      s"bits=$BucketBits..$BucketBitsMax|tgt=$BucketTarget"))(
+      Portable.bucketBits(t.embeddings.count(),
+        BucketBits, BucketBitsMax, BucketTarget))
   val IvfCentroids = 16 // coarse-quantizer cells; at 100 TB: ~sqrt(corpus)
   val IvfNProbe = 4 // cells a query scans; the IVF recall/cost dial
   val PqSubspaces = 8 // product-quantization sub-vector count

@@ -245,12 +245,6 @@ object Opq {
     .StoreDef("graft_opq_rot", "embeddings",
       s"d=${Ann.PqSubspaces * Ann.PqSubDim}|m=${Ann.PqSubspaces}")
 
-  // memo keyed on the file-inventory tag (not the Tables value), so a
-  // regenerated corpus re-reads the store instead of serving a stale
-  // in-memory rotation against a fresher oracle (ADVICE r8 discipline)
-  private val rotations =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
   /** The most recently fitted (or store-loaded) rotation — what
     * [[embedAnnOpqPqSql]] inlines as literals. Verify runs every query
     * BEFORE dumping oracle_sql.json, so by dump time this holds the
@@ -265,10 +259,14 @@ object Opq {
     * pipeline oracle-checkable. The Spark side reads the store back
     * rather than trusting its in-memory fit, so a store written by an
     * earlier JVM (different reduce order ⇒ possibly different last-ulp
-    * moments) still agrees bit-for-bit with the oracle literals.
+    * moments) still agrees bit-for-bit with the oracle literals. Kept
+    * in [[graft.storage.PlanStats]] under the store's inventory tag (not
+    * the Tables value), so a regenerated corpus reads the store again
+    * (ADVICE r8 discipline).
     */
-  private def fittedRotation(t: graft.Tables): Array[Array[Double]] =
-    rotations.computeIfAbsent(RotationStore.tag(t), tag => {
+  private def fittedRotation(t: graft.Tables): Array[Array[Double]] = {
+    val tag = RotationStore.tag(t)
+    graft.storage.PlanStats(tag) {
       val d = Ann.PqSubspaces * Ann.PqSubDim
       val store = graft.storage.Materialize.ensureParquet(
         t.spark, RotationStore.prefix, tag, {
@@ -285,7 +283,8 @@ object Opq {
         .sortBy(_._1).map(_._2)
       lastFitted = Some(m)
       m
-    })
+    }
+  }
 
   /** `embed_ann_opq_pq` — OPQ-rotated product-quantization ANN, the
     * production composition of [[rotationFor]] + the PQ machinery.

@@ -215,7 +215,8 @@ object Mixing {
     * [[ccnetBucketBounded]]'s broadcast side, exposed so consumers
     * that assign buckets elsewhere (the weighted sampler, the
     * streaming intake twin) share the identical cut values. langs×2
-    * doubles: computed once, broadcast everywhere.
+    * doubles: derived once per score-store inventory ([[quantileBounds]]
+    * at q = 3, same memo), broadcast everywhere.
     */
   private[graft] def ccnetBounds(t: Tables): DataFrame =
     quantileBounds(t, 3).select(col("lang"),
@@ -234,17 +235,26 @@ object Mixing {
     * found by [[graft.functions.OrderStat]]'s histogram narrowing —
     * O(log n) distributed aggregations per batch of targets, never a
     * per-language sort, so the boundary table costs the same a few
-    * scans whether q is 3 or 100. langs×(q−1) doubles: computed once,
-    * broadcast everywhere.
+    * scans whether q is 3 or 100. langs×(q−1) doubles, broadcast
+    * everywhere, and kept in [[graft.storage.PlanStats]] under
+    * (`LmScoresStore.tag(t)`, q), the store's inventory-plus-config tag:
+    * a landing or a scorer retune derives them again; over an unchanged
+    * store a call launches no job and rebuilds the small local frame.
     */
-  private[graft] def quantileBounds(t: Tables, q: Int): DataFrame =
-    quantileBoundsOf(lmScoresMaterialized(t), q)
+  private[graft] def quantileBounds(t: Tables, q: Int): DataFrame = {
+    val spark = t.spark
+    import spark.implicits._
+    graft.storage.PlanStats((LmScoresStore.tag(t), q))(
+      quantileBoundsOf(lmScoresMaterialized(t), q).as[(String, Seq[Double])]
+        .collect().toSeq).toDF("lang", "cuts")
+  }
 
   /** [[quantileBounds]] over an ARBITRARY (doc_id, lang, lm_score)
     * frame — the boundary search parameterized by which slice of the
     * score store it ranks, so a rebucket audit ([[rebucketDelta]]) can
     * reconstruct the boundary table an EARLIER corpus prefix would
-    * have published without a second score run.
+    * have published without a second score run. Not memoized: the
+    * frame has no inventory tag.
     */
   private[graft] def quantileBoundsOf(scores: DataFrame, q: Int): DataFrame = {
     import graft.functions.OrderStat

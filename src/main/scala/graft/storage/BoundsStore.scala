@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions.col
   * of anything: the periodic batch job recomputes the langs×2 table
   * (cheap — OrderStat histogram search over the materialized score
   * store), publishes it as a generation, and the intake job picks it up
-  * on roll. Readers mid-run keep the generation they resolved —
+  * on roll. The table it publishes is `Mixing.quantileBounds`' memo
+  * entry, keyed by the score store's inventory tag: a publish over an
+  * unchanged corpus runs no search, only the write, and any landing
+  * derives the table again. Readers mid-run keep the generation they resolved —
   * generations are immutable until [[retireOld]] — so every doc
   * bucketed by one job incarnation used ONE consistent boundary table,
   * and the generation number in the path records which.

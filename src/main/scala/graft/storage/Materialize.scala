@@ -148,16 +148,12 @@ object Materialize {
   private def keyOf(f: FileStatus): FileKey =
     (f.getPath.getName, f.getLen, f.getModificationTime)
 
-  // each manifest read so far, keyed by the listing of its inventory
-  // artifact: part-file names carry a per-write UUID, so a root reaped
-  // and rebuilt at the same path lists differently and is read again
-  private val manifests =
-    ParquetRead.lru[Seq[(String, Long, Long)], (Seq[FileKey], Long)]()
-
   /** Generation `n`'s manifest: the file inventory it covers, and the
     * generation its read chain starts at (`n` itself for a base).
     * Committed generations are immutable, so a warm ensure that finds
-    * the listing unchanged reads it from memory and runs no job.
+    * the listing unchanged reads it from memory ([[PlanStats]], keyed by
+    * that listing: part-file names carry a per-write UUID, so a root
+    * reaped and rebuilt at the same path is read again) and runs no job.
     */
   private def manifest(spark: SparkSession, root: String,
                        n: Long): (Seq[FileKey], Long) = {
@@ -166,13 +162,11 @@ object Materialize {
       .listStatus(inv).toSeq
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
       .sortBy(_._1)
-    Option(manifests.synchronized(manifests.get(listing))).getOrElse {
+    PlanStats(listing) {
       val rows = ParquetRead(spark, inv.toString)
         .select("file", "len", "mtime", "base_gen").collect().toSeq
-      val m = (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
+      (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
         rows.headOption.fold(n)(_.getLong(3)))
-      manifests.synchronized(manifests.put(listing, m))
-      m
     }
   }
 
@@ -300,17 +294,6 @@ object Materialize {
     val (gens, _, since) = last.get
     (gens.last, segments(spark, root.toString, gens, since))
   }
-
-  /** Current committed generation of an incremental root — the number
-    * a long-lived reader PINS at start (generations are immutable
-    * until retired, the [[Generations]] contract), so a stream job
-    * observes store growth on ROLL (restart re-resolves) instead of
-    * memoizing a session-lifetime static side (VERDICT r16 #4; the
-    * `ClusterStore.readLabels` deployment shape).
-    */
-  def currentIncrementalGen(spark: SparkSession, root: String): Option[Long] =
-    Generations.committed(root, RowsArtifact,
-      spark.sessionState.newHadoopConf()).lastOption
 
   /** Read an incremental root AT a pinned generation: the segment
     * chain from that generation's last base through it. Every dir in

@@ -28,7 +28,15 @@ class BucketingSpec extends SparkSpec {
     val r = store("b_orders",
       tables.orders.select("o_orderkey", "o_custkey"), "o_orderkey")
     val joined = l.join(r, l("l_orderkey") === r("o_orderkey"))
-    val plan = physical(joined)
+    // both sides fit under the broadcast threshold, and a broadcast join
+    // has no hash exchange whatever the layout: force a sort-merge join
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val plan =
+      try physical(joined)
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(plan.contains("SortMergeJoin"), s"not a sort-merge join:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"co-located join must not shuffle:\n$plan")
     // and it is the same row count as the shuffled join

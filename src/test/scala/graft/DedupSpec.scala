@@ -860,4 +860,28 @@ class DedupSpec extends SparkSpec {
       }
     }
   }
+
+  test("near-dup clusters follow a landing under a live dir") {
+    import org.apache.spark.sql.functions._
+    val t = TempCorpus.copyOf(spark, sfDir, "graft-clusters-grow", "documents")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = labels(Dedup.nearDupClusters(t))
+    val rankedBefore = labels(Dedup.clusterRank(t))
+    assert(before.nonEmpty && rankedBefore.keySet == before.keySet)
+    // a near copy of a cluster keeper: its text with one word appended
+    val keeper = before.values.min
+    val newId = t.documents.agg(max(col("doc_id"))).head.getLong(0) + 1
+    TempCorpus.land(t, "documents", t.documents
+      .filter(col("doc_id") === keeper)
+      .withColumn("doc_id", lit(newId))
+      .withColumn("text", concat(col("text"), lit(" addendum")))
+      .withColumn("n_chars", length(col("text")).cast("long")))
+    val after = labels(Dedup.nearDupClusters(t))
+    assert(after != before, "clusters converged before the landing were served")
+    assert(after.get(newId).contains(keeper),
+      s"the landed near copy of $keeper is not in its cluster: ${after.get(newId)}")
+    assert(after - newId == before)
+    assert(labels(Dedup.clusterRank(t)).keySet == after.keySet)
+  }
 }
