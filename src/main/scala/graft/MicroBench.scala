@@ -14,10 +14,10 @@ object MicroBench {
 
   private def frames(t: Tables): Seq[(String, () => DataFrame)] = Seq(
     "shingle_store_scan" ->
-      (() => graft.dedup.Dedup.keeperShinglesMaterialized(t)),
+      (() => graft.dedup.Dedup.corpusShingleStore(t)),
     "minhash_bands" ->
       (() => graft.dedup.Dedup.bandsFrom(
-        graft.dedup.Dedup.keeperShinglesMaterialized(t))),
+        graft.dedup.Dedup.corpusShingleStore(t))),
     "minhash_candidates_mat" ->
       (() => graft.dedup.Dedup.dedupMinhashBucketedUnsorted(t)),
     "verified_pairs" ->

@@ -153,7 +153,8 @@ object Dedup {
   private def shingles(t: Tables): DataFrame = shinglesOf(t.documents)
 
   /** Keeper-only shingles — the shingle frame every LSH band path
-    * builds on (see [[keeperDocs]]).
+    * builds on (see [[keeperDocs]]), derived live for the live entries;
+    * the store-routed paths read [[corpusShingleStore]].
     */
   private def keeperShingles(t: Tables): DataFrame =
     shinglesOf(keeperDocs(t))
@@ -255,16 +256,29 @@ object Dedup {
 
   private def dedupNgramJaccardFrom(shAll: DataFrame, cap: Int): DataFrame = {
     val sh = cappedShinglesFrom(shAll, cap)
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    ngramCandidatesFrom(sh)
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round6(col("common").cast("double")
-          / (col("sa.n") + col("sb.n") - col("common"))).as("jaccard"))
-      .filter(col("jaccard") >= JaccardMin)
+    scoredJaccard(ngramCandidatesFrom(sh), setSizes(sh))
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** Per-doc set sizes (doc_id, n) of a shingle frame. */
+  private def setSizes(sh: DataFrame): DataFrame =
+    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+
+  /** The scored Jaccard tail of every exact-Jaccard op: pair counts
+    * (doc_a, doc_b, common, …) joined to both ends' set sizes `sz`,
+    * scored round6(common / (n_a + n_b − common)) and cut at
+    * [[JaccardMin]]. `keep` columns follow the score.
+    */
+  private def scoredJaccard(pairs: DataFrame, sz: DataFrame,
+                            keep: Column*): DataFrame =
+    pairs
+      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
+      .select(Seq(col("doc_a"), col("doc_b"),
+        round6(col("common").cast("double")
+          / (col("sa.n") + col("sb.n") - col("common"))).as("jaccard"))
+        ++ keep: _*)
+      .filter(col("jaccard") >= JaccardMin)
 
   def dedupNgramJaccardSql: String =
     s"""WITH $shinglesSql,
@@ -637,7 +651,8 @@ object Dedup {
       .select(col("doc_id"), col("bk.band_idx"), col("bk.band_key"))
   }
 
-  /** [[bandsFrom]] over the materialized KEEPER shingle store, reduced
+  /** [[bandsFrom]] over the keeper-routed shingle store
+    * ([[corpusShingleStore]]), reduced
     * to the rows the streaming intake gate probes — the corpus side of
     * the stream-static band join. Keys at or under [[BandDocFreqCap]]
     * keep every row; a FLOODED key keeps only its min-doc row, so an
@@ -651,7 +666,7 @@ object Dedup {
     * the static side itself is always capped at cap rows per key.
     */
   private[graft] def corpusBands(t: Tables): DataFrame = {
-    val s = bandStats(bandsFrom(keeperShinglesMaterialized(t)), Nil)
+    val s = bandStats(bandsFrom(corpusShingleStore(t)), Nil)
     s.filter(col("f") <= BandDocFreqCap || col("doc_id") === col("m.doc_id"))
       .select(col("doc_id"), col("band_idx"), col("band_key"))
   }
@@ -726,8 +741,11 @@ object Dedup {
     * the production near-dup pair list; recall is bounded by LSH
     * (DedupSpec pins candidates ⊇ true high-jaccard pairs at test sf).
     */
-  def dedupMinhashVerified(t: Tables): DataFrame =
-    dedupMinhashVerifiedFrom(keeperShingles(t))
+  def dedupMinhashVerified(t: Tables): DataFrame = {
+    val sh = keeperShingles(t)
+    verifiedPairsFrom(sh, minhashCandidatesFrom(sh), Nil)
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
 
   /** [[dedupMinhashVerified]] over a MATERIALIZED shingle table: the
     * tokenize + distinct pass is written to warehouse parquet once per
@@ -776,10 +794,10 @@ object Dedup {
     * routing or dense true-dup neighborhoods) and broadcasts.
     */
   def dedupMinhashVerifiedSalted(t: Tables): DataFrame =
-    // candidates from the bucketed band store — the
-    // [[verifiedPairsUnsorted]] routing note; the whale/salt machinery
-    // downstream is unchanged
-    verifiedPairsSaltedFrom(keeperShinglesMaterialized(t),
+    // candidates from the bucketed band store and shingles from the
+    // incremental store — the [[verifiedPairsUnsorted]] routing note;
+    // the whale/salt machinery downstream is unchanged
+    verifiedPairsSaltedFrom(shinglesMaterialized(t),
       candOpt = Some(dedupMinhashBucketedUnsorted(t)))
       .orderBy(col("doc_a"), col("doc_b"))
 
@@ -797,20 +815,16 @@ object Dedup {
       salts: Int = VerifySalts,
       candOpt: Option[DataFrame] = None): SaltedVerifyFrames = {
     val cand = candOpt.getOrElse(minhashCandidatesFrom(shAll))
-    val ends = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id")))
     // ONE degree aggregation serves both consumers: candDocs is its
     // projection and the whale list its filter, so the exchange under
     // it is planned once and reused — the r20 plan derived the pair
     // endpoints twice (a distinct AND a count aggregation over
     // separate exchanges of the same union)
-    val deg = ends.groupBy(col("doc_id")).agg(count(lit(1)).as("deg"))
-    val candDocs = deg.select(col("doc_id"))
+    val deg = pairEnds(cand).groupBy(col("doc_id")).agg(count(lit(1)).as("deg"))
     val whales = deg
       .filter(col("deg") > whaleDegree)
       .select(col("doc_id"), lit(true).as("w"))
-    val sh = shAll.join(candDocs, Seq("doc_id"), "left_semi")
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val (sh, sz) = candidateShingles(shAll, deg.select(col("doc_id")))
     // whale shingle rows exist once per salt; everyone else salt 0 only
     val shS = sh
       .join(broadcast(whales), Seq("doc_id"), "left")
@@ -840,21 +854,53 @@ object Dedup {
       salts: Int = VerifySalts,
       candOpt: Option[DataFrame] = None): DataFrame = {
     val f = saltedVerifyFrames(shAll, whaleDegree, salts, candOpt)
-    val (shS, candS, sz) = (f.shS, f.candS, f.sz)
-    candS
-      .join(shS.as("x"),
-        col("doc_a") === col("x.doc_id") && col("salt_a") === col("x.salt"))
-      .join(shS.as("y"),
-        col("doc_b") === col("y.doc_id") && col("salt_b") === col("y.salt")
-          && col("x.s") === col("y.s"))
+    verifyJoin(f.candS, f.shS, f.sz, salted = true, Nil)
+  }
+
+  /** The endpoint docs of a (doc_a, doc_b) pair frame, one row per end. */
+  private def pairEnds(cand: DataFrame): DataFrame =
+    cand.select(col("doc_a").as("doc_id"))
+      .union(cand.select(col("doc_b").as("doc_id")))
+
+  /** The candidate docs' shingle rows and set sizes; the semi-join is
+    * the keeper routing whenever the candidates are keeper pairs.
+    */
+  private def candidateShingles(shAll: DataFrame,
+                                candDocs: DataFrame): (DataFrame, DataFrame) = {
+    val sh = shAll.join(candDocs, Seq("doc_id"), "left_semi")
+    (sh, setSizes(sh))
+  }
+
+  /** THE verify join of every verified-pair op: each candidate pair
+    * meets its two docs' shingle rows, the shared shingles are counted
+    * per pair (with `aggs` in the same pass), and the count is scored
+    * ([[scoredJaccard]], `keep` riding along). `salted` adds the salt
+    * to both join keys: [[saltedVerifyFrames]] routes whales, the join
+    * itself is this one.
+    */
+  private def verifyJoin(cand: DataFrame, sh: DataFrame, sz: DataFrame,
+                         salted: Boolean, aggs: Seq[Column],
+                         keep: Column*): DataFrame = {
+    def on(end: String, side: String): Column = {
+      val doc = col(s"doc_$end") === col(s"$side.doc_id")
+      if (salted) doc && col(s"salt_$end") === col(s"$side.salt") else doc
+    }
+    scoredJaccard(cand
+      .join(sh.as("x"), on("a", "x"))
+      .join(sh.as("y"), on("b", "y") && col("x.s") === col("y.s"))
       .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round6(col("common").cast("double")
-          / (col("sa.n") + col("sb.n") - col("common"))).as("jaccard"))
-      .filter(col("jaccard") >= JaccardMin)
+      .agg(count(lit(1)).as("common"), aggs: _*), sz, keep: _*)
+  }
+
+  /** Verified pairs WITHOUT the output sort — the near-dup edge list,
+    * for composition ([[nearDupClusters]]) where a mid-plan global
+    * sort would be waste: candidates `cand` over the shingle frame
+    * `shAll`, through the one verify join.
+    */
+  private def verifiedPairsFrom(shAll: DataFrame, cand: DataFrame,
+                                aggs: Seq[Column], keep: Column*): DataFrame = {
+    val (sh, sz) = candidateShingles(shAll, pairEnds(cand).distinct())
+    verifyJoin(cand, sh, sz, salted = false, aggs, keep: _*)
   }
 
   /** Ensure-write [[shingles]] to a per-corpus warehouse store, read
@@ -878,25 +924,16 @@ object Dedup {
   private def shinglesMaterialized(t: Tables): DataFrame =
     graft.storage.Materialize.ensureIncremental(t, ShinglesStore, shinglesOf)
 
-  /** [[shinglesMaterialized]] for the KEEPER shingle frame — the store
-    * the minhash/LSH family reads. Separate prefix: the full store
-    * serves the exhaustive inverted-index path ([[dedupNgramJaccardMat]]),
-    * this one the candidate/verify path, and on a dupe-free corpus the
-    * two hold identical rows. Materializing keepers (not live-filtering
-    * the full store) keeps the `_mat` entries' pinned property — no
-    * documents.parquet scan at query time — intact: the md5 keeper
-    * reduction happens once, at store build.
-    */
-  private[graft] def keeperShinglesMaterialized(t: Tables): DataFrame =
-    graft.storage.Materialize.ensureStore(t, KeeperShinglesStore,
-      keeperShingles(t))
-
-  /** The materialized corpus (keeper) shingle store, for stream-static
-    * verify joins (streaming.Jobs.ClusterAssignStream computes exact
-    * Jaccard between arriving docs and their band-matched corpus docs).
+  /** [[keeperShingles]] over the stores: [[shinglesMaterialized]]
+    * semi-joined on the keeper id store, for the band stores, the
+    * stream-static verify joins (streaming.Jobs.ClusterAssignStream)
+    * and the prefix-corpus delta. Tokenization is paid once per part
+    * file, the md5 keeper reduction once per corpus, and no
+    * documents.parquet scan is left at query time.
     */
   private[graft] def corpusShingleStore(t: Tables): DataFrame =
-    keeperShinglesMaterialized(t)
+    shinglesMaterialized(t).join(keeperIdsMaterialized(t), Seq("doc_id"),
+      "left_semi")
 
   /** The corpus side of the STREAMING containment gate
     * (streaming.Jobs.ContainmentGate): the capped posting list over the
@@ -962,8 +999,6 @@ object Dedup {
     .StoreDef("graft_keeper_ids", "documents", "keep-ids")
   private[graft] lazy val ShinglesStore = graft.storage.Materialize
     .StoreDef("graft_shingles", "documents", s"sh=$ShingleSize")
-  private[graft] lazy val KeeperShinglesStore = graft.storage.Materialize
-    .StoreDef("graft_shingles_keep", "documents", s"sh=$ShingleSize|keep")
   private[graft] lazy val SimhashStore = graft.storage.Materialize
     .StoreDef("graft_simhash", "documents", s"bits=$SimhashBits|keep")
   private[graft] lazy val ShinglesBucketedStore = graft.storage.Materialize
@@ -974,14 +1009,16 @@ object Dedup {
       s"sh=$ShingleSize|p=$NumPerms|nb=$NumBands|b=$DedupStoreBuckets|keep|" +
         Bucketing.Layout)
 
-  /** [[shingles]] as a store BUCKETED by the shingle
+  /** The incremental shingle store rewritten BUCKETED by the shingle
     * string — the storage layout the inverted-index consumers want:
     * the doc-freq cap aggregation, the rare-shingle semi-join, and the
     * posting-list self-join all cluster on `s`, so over this store
     * every one of them runs with ZERO exchange (DedupSpec pins it).
     * The one shuffle the live plan pays per consumer is paid once, at
     * write, and amortized across every later query on the corpus —
-    * the `storage.Bucketing` q3 pattern applied to the dedup path.
+    * the `storage.Bucketing` q3 pattern applied to the dedup path. The
+    * rewrite reads the incremental store, so a landing tokenizes only
+    * its own part files.
     */
   private def shinglesBucketed(t: Tables): DataFrame =
     // repartition on the bucket key before the bucketed write:
@@ -990,7 +1027,7 @@ object Dedup {
     // the layout Spark trusts sortBy metadata for (multi-file buckets
     // re-sort at read)
     graft.storage.Materialize.ensureStore(t, ShinglesBucketedStore,
-      shingles(t).repartition(DedupStoreBuckets, col("s")),
+      shinglesMaterialized(t).repartition(DedupStoreBuckets, col("s")),
       bucketing = Some(Bucketing.spec(DedupStoreBuckets, "s")))
 
   /** [[dedupNgramJaccard]] over the BUCKETED shingle store: identical
@@ -1013,11 +1050,12 @@ object Dedup {
     * shuffled scan. The signature aggregation (one shuffle on doc_id)
     * is paid once at write; band recomputation — re-thresholding, the
     * streaming intake gate, the cluster loop's edge derivation — reads
-    * 3 hashed columns.
+    * 3 hashed columns. Built over [[corpusShingleStore]], so no
+    * landing re-tokenizes the corpus for it.
     */
   private[graft] def bandsBucketed(t: Tables): DataFrame =
     graft.storage.Materialize.ensureStore(t, BandsBucketedStore,
-      bandsFrom(keeperShinglesMaterialized(t))
+      bandsFrom(corpusShingleStore(t))
         .repartition(DedupStoreBuckets, col("band_idx"), col("band_key")),
       bucketing = Some(Bucketing.spec(DedupStoreBuckets, "band_idx",
         "band_key")))
@@ -1065,9 +1103,9 @@ object Dedup {
     // protocol in r18: their live data lives under `<prefix>_gens_<tag>`
     // roots (reaped below with stable-tag keep-sets) and any classic
     // `<prefix>_<tag>` dir left by a pre-r18 binary is unreadable
-    // garbage — reaped unconditionally (empty keep-set).
-    val parquetStores = Seq(KeeperIdsStore -> true,
-      ShinglesStore -> false, KeeperShinglesStore -> true,
+    // garbage — reaped unconditionally (empty keep-set), as is every
+    // `graft_shingles_keep` dir of the retired keeper shingle store.
+    val parquetStores = Seq(KeeperIdsStore -> true, ShinglesStore -> false,
       SimhashStore -> true, EvalCorpusStore -> true,
       graft.pipeline.Mixing.LmScoresStore -> true,
       graft.pipeline.Reports.EqdBoundsStore -> true,
@@ -1077,7 +1115,7 @@ object Dedup {
     val reapedDirs = parquetStores.flatMap { case (s, live) =>
       Materialize.reapStale(t.spark, s.prefix,
         if (live) corpora.map(s.tag).toSet else Set.empty)
-    }
+    } ++ Materialize.reapStale(t.spark, "graft_shingles_keep", Set.empty)
     val reapedIncRoots = Seq(ShinglesStore, Substring.WindowsStore)
       .flatMap { s =>
         Materialize.reapStale(t.spark, s.prefix + "_gens",
@@ -1085,9 +1123,6 @@ object Dedup {
       }
     reapedDirs ++ reapedIncRoots
   }
-
-  private def dedupMinhashVerifiedFrom(shAll: DataFrame): DataFrame =
-    verifiedPairsFrom(shAll).orderBy(col("doc_a"), col("doc_b"))
 
   /** The verified near-dup edge list, unsorted, over the materialized
     * stores — the composition form for cross-operator consumers
@@ -1102,38 +1137,12 @@ object Dedup {
     * frame — was paid once at store write instead of inside every
     * consumer's plan (optimization guide §2.4: bucketed tables persist
     * a partitioning so repeated joins/aggregations skip the shuffle).
+    * Shingles come from the incremental store: the candidate docs are
+    * keepers, so the verify join's semi-join is the keeper routing.
     */
   private[graft] def verifiedPairsUnsorted(t: Tables): DataFrame =
-    verifiedPairsFrom(keeperShinglesMaterialized(t),
-      Some(dedupMinhashBucketedUnsorted(t)))
-
-  /** Verified pairs WITHOUT the output sort — the near-dup edge list,
-    * for composition ([[nearDupClusters]]) where a mid-plan global
-    * sort would be waste. `candOpt` overrides candidate generation
-    * (the bucketed band store for store-routed consumers); the default
-    * derives bands live from `shAll` — the pedagogical twin and the
-    * prefix-corpus delta, whose shingle slice has no band store.
-    */
-  private def verifiedPairsFrom(shAll: DataFrame,
-                                candOpt: Option[DataFrame] = None): DataFrame = {
-    val cand = candOpt.getOrElse(minhashCandidatesFrom(shAll))
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = shAll.join(candDocs, Seq("doc_id"), "left_semi")
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    cand
-      .join(sh.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(sh.as("y"),
-        col("doc_b") === col("y.doc_id") && col("x.s") === col("y.s"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round6(col("common").cast("double")
-          / (col("sa.n") + col("sb.n") - col("common"))).as("jaccard"))
-      .filter(col("jaccard") >= JaccardMin)
-  }
+    verifiedPairsFrom(shinglesMaterialized(t),
+      dedupMinhashBucketedUnsorted(t), Nil)
 
   /** CTE chain ending in `ver` (doc_a, doc_b, jaccard — the verified
     * near-dup pairs): shared by [[dedupMinhashVerifiedSql]] and the
@@ -1181,38 +1190,19 @@ object Dedup {
     * evidence aggregation had. Portable: the sample is concat_ws over
     * a binary-collation sort — identical both engines.
     */
-  def dedupPairEvidence(t: Tables): DataFrame = {
-    val shAll = keeperShinglesMaterialized(t)
-    // candidates from the bucketed band store — the
-    // [[verifiedPairsUnsorted]] routing note
-    val cand = dedupMinhashBucketedUnsorted(t)
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = shAll.join(candDocs, Seq("doc_id"), "left_semi")
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    cand
-      .join(sh.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(sh.as("y"),
-        col("doc_b") === col("y.doc_id") && col("x.s") === col("y.s"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("common"),
-        // bounded min-k (r22): the k lexicographically-first shared
-        // shingles with O(k) heap state — the collect_list form held
-        // the pair's whole shared-shingle set in the aggregation
-        // buffer just to slice 3 (guide §5; same rows, same order)
-        concat_ws(" | ",
-          graft.functions.BoundedMinK.boundedMinK(
-            col("x.s"), EvidenceSampleK))
-          .as("sample_shingles"))
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round6(col("common").cast("double")
-          / (col("sa.n") + col("sb.n") - col("common"))).as("jaccard"),
-        col("common").as("n_shared"), col("sample_shingles"))
-      .filter(col("jaccard") >= JaccardMin)
+  def dedupPairEvidence(t: Tables): DataFrame =
+    // candidates and shingles as in [[verifiedPairsUnsorted]]
+    verifiedPairsFrom(shinglesMaterialized(t),
+      dedupMinhashBucketedUnsorted(t),
+      // bounded min-k (r22): the k lexicographically-first shared
+      // shingles with O(k) heap state — the collect_list form held
+      // the pair's whole shared-shingle set in the aggregation
+      // buffer just to slice 3 (guide §5; same rows, same order)
+      Seq(concat_ws(" | ",
+        graft.functions.BoundedMinK.boundedMinK(
+          col("x.s"), EvidenceSampleK)).as("sample_shingles")),
+      col("common").as("n_shared"), col("sample_shingles"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   def dedupPairEvidenceSql: String =
     s"""WITH $verifiedPairCtes,
@@ -1631,10 +1621,11 @@ object Dedup {
     val cutoff = t.documents.agg(max(col("doc_id"))).head.getLong(0) / 2
     // the fixpoint runs eagerly at construction — memoized like the
     // full-corpus labels so repeated calls (bench passes) pay once
-    val lab0 = ClusterFrames(t, "documents", "text_pfx")(
-      clusterKeepers(verifiedPairsFrom(
-        keeperShinglesMaterialized(t).filter(col("doc_id") <= cutoff))
-        .select(col("doc_a"), col("doc_b"))))
+    val lab0 = ClusterFrames(t, "documents", "text_pfx") {
+      val sh = corpusShingleStore(t).filter(col("doc_id") <= cutoff)
+      clusterKeepers(verifiedPairsFrom(sh, minhashCandidatesFrom(sh), Nil)
+        .select(col("doc_a"), col("doc_b")))
+    }
     val lab1 = nearDupClusters(t)
     lab0.select(col("doc_id"), col("keeper_id").as("keeper_old"))
       .join(lab1.select(col("doc_id"), col("keeper_id").as("keeper_new")),

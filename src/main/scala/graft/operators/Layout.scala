@@ -142,7 +142,9 @@ object Layout {
       // the probe count rides the plan as a broadcast 1-row aggregate
       // instead of a driver-side probes.count() action (r22, VERDICT
       // r21 #6: two eager collect-shaped actions per entry gone —
-      // same integer, now computed inside the one job)
+      // same integer, now computed inside the one job). Guard: the
+      // in-plan count re-derives the probe subtree, cheap only while
+      // probes stay zone-map-sized.
       val np = broadcast(probes.agg(count(lit(1)).as("n_probes")))
       zm.join(broadcast(probes),
           col("p") >= col(lo) && col("p") <= col(hi))

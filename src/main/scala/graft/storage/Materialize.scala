@@ -356,7 +356,7 @@ object Materialize {
     * copy of the store each, which at 100 TB is real money. Matching is
     * strict (`<prefix>_` + exactly 12 hex chars), so a prefix that is
     * itself a prefix of another store's name (`graft_shingles` vs
-    * `graft_shingles_keep`) can never reap the other store's dirs.
+    * `graft_shingles_b`) can never reap the other store's dirs.
     * Operational maintenance, not a query-path call: run it AFTER
     * consumers of the old tags have drained, same contract as
     * `IndexMaintenance.retireOld`.

@@ -891,11 +891,7 @@ object Jobs {
       val keepers = labelsRoot match {
         case Some(root) =>
           import graft.storage.ClusterStore
-          val n = ClusterStore.currentGeneration(root,
-            spark.sessionState.newHadoopConf()).getOrElse(
-            throw new IllegalStateException(
-              s"no committed cluster-label generation under $root"))
-          StaticCache.of(t, s"corpusKeepers@$root/gen=$n") {
+          StaticCache.current(t, "corpusKeepers", ClusterStore, root) { n =>
             ClusterStore.readLabels(spark, root, n)
               .select(col("doc_id").as("corpus_doc"),
                 col("keeper_id").as("cluster_keeper"))
@@ -1251,14 +1247,8 @@ object Jobs {
       val bounds = boundsRoot match {
         case Some(root) =>
           import graft.storage.BoundsStore
-          val spark = docs.sparkSession
-          val n = BoundsStore.currentGeneration(root,
-            spark.sessionState.newHadoopConf()).getOrElse(
-            throw new IllegalStateException(
-              s"no committed bounds generation under $root"))
-          StaticCache.of(t, s"ccnetBounds@$root/gen=$n") {
-            BoundsStore.readBounds(spark, root, n)
-          }
+          StaticCache.current(t, "ccnetBounds", BoundsStore, root)(
+            BoundsStore.readBounds(docs.sparkSession, root, _))
         case None => StaticCache.of(t, "ccnetBounds")(Mixing.ccnetBounds(t))
       }
       val bi = TextAnalysis.bigramsOf(
@@ -1465,13 +1455,8 @@ object Jobs {
       val bounds = boundsRoot match {
         case Some(root) =>
           import graft.storage.BoundsStore
-          val n = BoundsStore.currentGeneration(root,
-            spark.sessionState.newHadoopConf()).getOrElse(
-            throw new IllegalStateException(
-              s"no committed bounds generation under $root"))
-          StaticCache.of(t, s"ccnetBounds@$root/gen=$n") {
-            BoundsStore.readBounds(spark, root, n)
-          }
+          StaticCache.current(t, "ccnetBounds", BoundsStore, root)(
+            BoundsStore.readBounds(spark, root, _))
         case None => StaticCache.of(t, "ccnetBounds")(Mixing.ccnetBounds(t))
       }
       // band keys reduced to ONE row per key (min corpus doc): the nd
@@ -1842,6 +1827,20 @@ object Jobs {
         } else old)
       if (evicted != null) evicted.unpersist()
       if (cur._1 == gen) cur._2 else build
+    }
+
+    /** [[at]] for a static side published in a
+      * [[graft.storage.GenerationStore]]: `read` of `root`'s current
+      * generation, in the (corpus, `role@root`) slot, so a roll
+      * displaces the previous generation's frame.
+      */
+    def current(t: Tables, role: String, store: graft.storage.GenerationStore,
+                root: String)(read: Long => DataFrame): DataFrame = {
+      val n = store.currentGeneration(root,
+        t.spark.sessionState.newHadoopConf()).getOrElse(
+        throw new IllegalStateException(
+          s"no committed $role generation under $root"))
+      at(t, s"$role@$root", n)(read(n))
     }
   }
 

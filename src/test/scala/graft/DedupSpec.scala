@@ -884,4 +884,72 @@ class DedupSpec extends SparkSpec {
     assert(after - newId == before)
     assert(labels(Dedup.clusterRank(t)).keySet == after.keySet)
   }
+
+  test("bucketed stores rebuilt after a landing equal a from-scratch build, growth and rebase alike") {
+    import org.apache.spark.sql.functions._
+    import graft.dedup.Substring
+    import graft.storage.Materialize
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    def keeperShingleDirs: Set[String] = wh.listFiles().map(_.getName)
+      .filter(_.startsWith("graft_shingles_keep_")).toSet
+    val keepDirs0 = keeperShingleDirs
+    val stores = Seq(Dedup.ShinglesBucketedStore, Dedup.BandsBucketedStore,
+      Substring.WindowsBucketedStore)
+    // builds the three bucketed stores of `c` through their entries and
+    // returns each store's rows
+    def storeRows(c: Tables): Seq[Seq[String]] = {
+      Dedup.dedupNgramJaccardBucketed(c).collect()
+      Dedup.dedupMinhashBucketed(c).collect()
+      Substring.substringSpansBucketed(c).collect()
+      stores.map(s => spark.read.parquet(new java.io.File(wh,
+        s"${s.prefix}_${s.tag(c)}").toString).collect().map(_.toString)
+        .sorted.toSeq)
+    }
+    def fromScratch(c: Tables): Seq[Seq[String]] =
+      storeRows(TempCorpus.copyOf(spark, c.dir, "graft-stores-fresh", "documents"))
+    // near copies (a new shingle each) and exact copies (no keepers)
+    def segment(c: Tables, from: Long, n: Int): org.apache.spark.sql.DataFrame = {
+      val maxId = c.documents.agg(max(col("doc_id"))).head.getLong(0)
+      val picked = c.documents.filter(col("doc_id") >= from)
+        .orderBy(col("doc_id")).limit(n)
+      picked.withColumn("doc_id", col("doc_id") + lit(maxId + 1))
+        .withColumn("text", concat(col("text"), lit(" addendum words here")))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .union(picked.withColumn("doc_id", col("doc_id") + lit(2 * maxId + 2)))
+    }
+    val t = TempCorpus.copyOf(spark, sfDir, "graft-stores-grow", "documents")
+    val before = storeRows(t)
+    def pending(): Seq[(Int, Boolean)] =
+      Seq(Dedup.ShinglesStore, Substring.WindowsStore).map { s =>
+        val (files, rebase) = Materialize.incrementalPending(t, s)
+        (files.size, rebase)
+      }
+
+    // growth: one new part file, the incremental stores append it
+    TempCorpus.land(t, "documents", segment(t, 0L, 10))
+    assert(pending() == Seq((1, false), (1, false)), pending().toString)
+    val grown = storeRows(t)
+    assert(grown.zip(before).forall { case (g, b) => g.size > b.size },
+      "the landing added no store rows")
+    assert(grown == fromScratch(t), "grown stores differ from a fresh build")
+
+    // rewrite: a recorded part file's rows move into a new file next to
+    // a second segment, so the incremental stores rebase
+    val docsDir = new org.apache.hadoop.fs.Path(t.dir, "documents.parquet")
+    val fs = docsDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val victim = fs.listStatus(docsDir).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).minBy(_.getName)
+    val moved = spark.read.parquet(victim.toString).collect().toSeq
+    val seg2 = segment(t, 50L, 10).collect().toSeq
+    fs.delete(victim, false)
+    TempCorpus.land(t, "documents", spark.createDataFrame(
+      spark.sparkContext.parallelize(moved ++ seg2, 1), t.documents.schema))
+    assert(pending().forall(_._2), s"a rewrite did not rebase: ${pending()}")
+    val rebased = storeRows(t)
+    assert(rebased != grown)
+    assert(rebased == fromScratch(t), "rebased stores differ from a fresh build")
+    assert((keeperShingleDirs -- keepDirs0).isEmpty,
+      s"a keeper shingle store was built: ${keeperShingleDirs -- keepDirs0}")
+  }
 }

@@ -1482,6 +1482,28 @@ class StreamingJobsSpec extends SparkSpec {
     assert(BoundsStore.committedGenerations(root) == Seq(1L))
   }
 
+  test("a rolled bounds generation unpersists the static frame of the one it displaced") {
+    import spark.implicits._
+    import graft.storage.BoundsStore
+    import org.apache.spark.storage.StorageLevel
+    val root = tmp("graft_bounds_roll")
+    assert(BoundsStore.publishFrom(tables, root) == 0L)
+    assert(BoundsStore.publishFrom(tables, root) == 1L)
+    val in = MemoryStream[(Timestamp, Long, String, String)]
+    def build(): DataFrame = Jobs.LmBucketStream.buckets(
+      in.toDF().toDF("ts", "doc_id", "lang", "text"), tables,
+      boundsRoot = Some(root))
+    // storageLevel is the cache manager's lookup of the frame's plan
+    def isCached(n: Long): Boolean =
+      BoundsStore.readBounds(spark, root, n).storageLevel != StorageLevel.NONE
+    build()
+    assert(isCached(1L), "the pinned gen-1 static side is not persisted")
+    assert(BoundsStore.publishFrom(tables, root) == 2L)
+    build()
+    assert(isCached(2L), "the rolled-to gen-2 static side is not persisted")
+    assert(!isCached(1L), "the displaced gen-1 frame is still cached")
+  }
+
   test("LmScoreStream: streamed intake scores ≡ batch lm_bigram_score exactly") {
     import spark.implicits._
     val in = MemoryStream[(Timestamp, Long, String)]
