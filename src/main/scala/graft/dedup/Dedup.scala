@@ -159,7 +159,7 @@ object Dedup {
   private def keeperShingles(t: Tables): DataFrame =
     shinglesOf(keeperDocs(t))
 
-  private def shinglesOf(docs: DataFrame): DataFrame =
+  private[graft] def shinglesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .where(size(col("ts")) >= ShingleSize)

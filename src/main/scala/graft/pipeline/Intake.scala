@@ -56,35 +56,92 @@ object Intake {
     case (acc, (b, r)) => when(col("bucket") === b, lit(r)).otherwise(acc)
   }
 
+  /** An admit's gate frames, in the shapes both composites join: the
+    * clean keepers' ids (built only when asked for), the repetition
+    * profile, the near-dup, containment and semantic-dup loser ids, and
+    * the CCNet bucket frame.
+    */
+  private final case class Gates(clean: Option[DataFrame], rep: DataFrame,
+                                 ndLosers: DataFrame, ctLosers: DataFrame,
+                                 semLosers: DataFrame, ccnet: DataFrame)
+
+  /** Builds the gate frames on one fresh driver thread each, joins them
+    * all and rethrows the first failure in pipeline order.
+    *
+    * A gate ensures its stores when its frame is built, so right after a
+    * landing each one runs a chain of small store-build jobs with driver
+    * work between them; run one after another they leave most cores
+    * idle. The chains are independent except for shared stores, which
+    * `storage.Materialize` builds once per JVM while the other callers
+    * wait. Fresh threads (not a pool) inherit the caller's Spark local
+    * properties, so every job carries the caller's job group.
+    *
+    * Every gate composes its UNSORTED form (ADVICE r9): the sorted
+    * public entries carry presentation orderBys that would sit mid-plan
+    * in a composite, and relying on Catalyst's EliminateSorts to drop
+    * them makes the no-extra-shuffle claim optimizer-dependent.
+    */
+  private def gates(t: Tables, clean: Boolean): Gates = {
+    def losers(pairs: DataFrame) =
+      pairs.select(col("doc_b").as("doc_id")).distinct()
+    val built = concurrently(
+      (if (clean) Seq("clean" -> (() =>
+        CorpusClean.corpusCleanUnsorted(t).select(col("doc_id"))))
+      else Nil) ++ Seq(
+        "repetition" -> (() =>
+          graft.textanalysis.TextAnalysis.qualityRepetitionUnsorted(t)),
+        // the BUCKETED band store's candidate pairs — pair-identical to
+        // the live minhashCandidates (pinned by DedupSpec/PlanSpec),
+        // exchange-free on the self-join: the production store for the
+        // production composite
+        "neardup" -> (() =>
+          losers(graft.dedup.Dedup.dedupMinhashBucketedUnsorted(t))),
+        "containment" -> (() =>
+          losers(graft.dedup.Dedup.dedupContainmentUnsorted(t))),
+        // SemDeDup drop set (keep-first: only the LATER holder of
+        // paraphrased content ever appears here) — the store-routed
+        // unsorted verdict frame
+        "semdup" -> (() => ChunkSemantic.docSemanticDupFracUnsorted(t)
+          .filter(col("verdict") === "drop").select(col("doc_id"))),
+        "ccnet" -> (() => Mixing.ccnetBucketBoundedUnsorted(t))))
+    val Seq(rep, nd, ct, sem, ccnet) = built.takeRight(5)
+    Gates(built.dropRight(5).headOption, rep, nd, ct, sem, ccnet)
+  }
+
+  /** `tasks`' results, each computed on a fresh thread named
+    * `graft-gate-<name>`; after all have ended, the first failure in
+    * `tasks` order is rethrown as is, with the later ones suppressed.
+    */
+  private def concurrently[A](tasks: Seq[(String, () => A)]): Seq[A] = {
+    val runs = tasks.map { case (name, task) =>
+      val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+      val th = new Thread(() =>
+        out.set(try Right(task()) catch { case e: Throwable => Left(e) }),
+        s"graft-gate-$name")
+      th.setDaemon(true)
+      th.start()
+      (th, out)
+    }
+    runs.foreach(_._1.join())
+    val results = runs.map(_._2.get)
+    results.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => results.collect { case Right(a) => a }
+    }
+  }
+
   def corpusAdmit(t: Tables): DataFrame = {
-    // every gate composes its UNSORTED form (ADVICE r9): the sorted
-    // public entries carry presentation orderBys that would sit
-    // mid-plan here, and relying on Catalyst's EliminateSorts to drop
-    // them makes the no-extra-shuffle claim optimizer-dependent.
     // PlanSpec pins the composed ANALYZED plan has exactly one Sort —
     // the output orderBy below.
-    val clean = CorpusClean.corpusCleanUnsorted(t).select(col("doc_id"))
-    val rep = graft.textanalysis.TextAnalysis.qualityRepetitionUnsorted(t)
-      .filter(col("keep") === 1).select(col("doc_id"))
-    // the BUCKETED band store's candidate pairs — pair-identical to the
-    // live minhashCandidates (pinned by DedupSpec/PlanSpec), exchange-
-    // free on the self-join: the production store for the production
-    // composite
-    val ndLosers = graft.dedup.Dedup.dedupMinhashBucketedUnsorted(t)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val ctLosers = graft.dedup.Dedup.dedupContainmentUnsorted(t)
-      .select(col("doc_b").as("doc_id")).distinct()
-    // SemDeDup drop set (keep-first: only the LATER holder of
-    // paraphrased content ever appears here) — the store-routed
-    // unsorted verdict frame
-    val semLosers = ChunkSemantic.docSemanticDupFracUnsorted(t)
-      .filter(col("verdict") === "drop").select(col("doc_id"))
-    Mixing.ccnetBucketBoundedUnsorted(t)
-      .join(clean, Seq("doc_id"))
-      .join(rep, Seq("doc_id"))
-      .join(ndLosers, Seq("doc_id"), "left_anti")
-      .join(ctLosers, Seq("doc_id"), "left_anti")
-      .join(semLosers, Seq("doc_id"), "left_anti")
+    val g = gates(t, clean = true)
+    g.ccnet
+      .join(g.clean.get, Seq("doc_id"))
+      .join(g.rep.filter(col("keep") === 1).select(col("doc_id")), Seq("doc_id"))
+      .join(g.ndLosers, Seq("doc_id"), "left_anti")
+      .join(g.ctLosers, Seq("doc_id"), "left_anti")
+      .join(g.semLosers, Seq("doc_id"), "left_anti")
       .withColumn("u", Mixing.u("ccn", col("doc_id")))
       .filter(col("u") < rateExpr)
       .select(col("doc_id"), col("lang"), col("lm_score"), col("bucket"),
@@ -103,19 +160,8 @@ object Intake {
     * pins it); same bounded gate plans, so the same scale story.
     */
   def corpusAdmitVerdicts(t: Tables): DataFrame = {
-    // unsorted composition forms throughout — same reasoning as
-    // [[corpusAdmit]]; PlanSpec pins one analyzed-plan Sort here too
-    val rep = graft.textanalysis.TextAnalysis.qualityRepetitionUnsorted(t)
-      .select(col("doc_id"), col("keep"))
-    val ndLosers = graft.dedup.Dedup.dedupMinhashBucketedUnsorted(t)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("nd", lit(1))
-    val ctLosers = graft.dedup.Dedup.dedupContainmentUnsorted(t)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("ct", lit(1))
-    val semLosers = ChunkSemantic.docSemanticDupFracUnsorted(t)
-      .filter(col("verdict") === "drop").select(col("doc_id"))
-      .withColumn("sm", lit(1))
+    // PlanSpec pins one analyzed-plan Sort here too
+    val g = gates(t, clean = false)
     t.documents
       // quality is a per-row projection (CorpusClean.qualityCol) — it
       // rides the keeper-window frame instead of a doc_id self-join.
@@ -126,12 +172,11 @@ object Intake {
       .withColumn("quality", CorpusClean.qualityCol)
       .withColumn("rn", CorpusClean.keeperRank)
       .select(col("doc_id"), col("lang"), col("rn"), col("quality"))
-      .join(rep, Seq("doc_id"), "left")
-      .join(ndLosers, Seq("doc_id"), "left")
-      .join(ctLosers, Seq("doc_id"), "left")
-      .join(semLosers, Seq("doc_id"), "left")
-      .join(Mixing.ccnetBucketBoundedUnsorted(t)
-        .select(col("doc_id"), col("bucket")), Seq("doc_id"), "left")
+      .join(g.rep.select(col("doc_id"), col("keep")), Seq("doc_id"), "left")
+      .join(g.ndLosers.withColumn("nd", lit(1)), Seq("doc_id"), "left")
+      .join(g.ctLosers.withColumn("ct", lit(1)), Seq("doc_id"), "left")
+      .join(g.semLosers.withColumn("sm", lit(1)), Seq("doc_id"), "left")
+      .join(g.ccnet.select(col("doc_id"), col("bucket")), Seq("doc_id"), "left")
       .withColumn("u", Mixing.u("ccn", col("doc_id")))
       .select(col("doc_id"), col("lang"),
         when(col("rn") =!= 1, "dup")

@@ -154,20 +154,27 @@ object Materialize {
     * the listing unchanged reads it from memory ([[PlanStats]], keyed by
     * that listing: part-file names carry a per-write UUID, so a root
     * reaped and rebuilt at the same path is read again) and runs no job.
+    * The writer seeds that memo when it commits, so its own re-read of
+    * the generation it just published runs no job either.
     */
   private def manifest(spark: SparkSession, root: String,
                        n: Long): (Seq[FileKey], Long) = {
-    val inv = new Path(Generations.path(root, n, InvArtifact))
-    val listing = inv.getFileSystem(spark.sessionState.newHadoopConf())
-      .listStatus(inv).toSeq
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-      .sortBy(_._1)
-    PlanStats(listing) {
-      val rows = ParquetRead(spark, inv.toString)
+    val inv = Generations.path(root, n, InvArtifact)
+    PlanStats(manifestListing(spark, inv)) {
+      val rows = ParquetRead(spark, inv)
         .select("file", "len", "mtime", "base_gen").collect().toSeq
       (rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
         rows.headOption.fold(n)(_.getLong(3)))
     }
+  }
+
+  /** The files of a committed manifest dir: its [[manifest]] memo key. */
+  private def manifestListing(spark: SparkSession,
+                              inv: String): Seq[(String, Long, Long)] = {
+    val p = new Path(inv)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).toSeq
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
   }
 
   /** One read of the committed `gens` from `since` on: a read chain. */
@@ -245,13 +252,19 @@ object Materialize {
           .write.parquet(new Path(tmp, InvArtifact).toString)
         rows.write.parquet(new Path(tmp, RowsArtifact).toString)
       }
-      // Lost: a concurrent writer committed this (or a later) generation
-      // — the ensure loop below re-reads ITS manifest and recomputes the
-      // pending decision against the locally observed inventory. Unless
-      // no committed generation ≥ n exists: `gen=<n>` is then a dead
-      // leftover, and returning would serve a stale store as fresh (the
-      // reader contract: rows for every current inventory file).
-      if (!won && !Generations.committed(root.toString, RowsArtifact, conf)
+      // Won: the manifest just written is (curKeys, since), so seed its
+      // memo and the re-read below runs no job. Lost: a concurrent writer
+      // (another JVM: callers in this one wait in single flight) committed
+      // this (or a later) generation — the ensure loop below re-reads ITS
+      // manifest and recomputes the pending decision against the locally
+      // observed inventory. Unless no committed generation ≥ n exists:
+      // `gen=<n>` is then a dead leftover, and returning would serve a
+      // stale store as fresh (the reader contract: rows for every current
+      // inventory file).
+      if (won)
+        PlanStats(manifestListing(spark,
+          Generations.path(root.toString, n, InvArtifact)))((curKeys, since))
+      else if (!Generations.committed(root.toString, RowsArtifact, conf)
           .exists(_ >= n))
         throw new java.io.IOException(
           s"failed to publish gen=$n under $root and no concurrent " +
@@ -260,7 +273,8 @@ object Materialize {
 
     // The committed generations and the newest one's manifest (None:
     // nothing committed yet) — the one manifest read of a pass.
-    def newest(): Option[(Seq[Long], Seq[FileKey], Long)] = {
+    type Newest = Option[(Seq[Long], Seq[FileKey], Long)]
+    def newest(): Newest = {
       val gens = Generations.committed(root.toString, RowsArtifact, conf)
       gens.lastOption.map { n =>
         val (rec, since) = manifest(spark, root.toString, n)
@@ -277,22 +291,36 @@ object Materialize {
     // recomputes the pending decision (growth over exactly the files
     // the winner missed / re-base) until coverage holds; bounded —
     // each pass either settles or commits a strictly newer generation.
-    var last = newest()
-    var attempts = 0
-    while (!last.exists { case (_, rec, _) => curKeys.forall(rec.toSet) }) {
-      attempts += 1
-      if (attempts > 4)
-        throw new java.io.IOException(
-          s"ensure of $root failed to converge after $attempts attempts " +
-            "— committed manifests keep missing locally observed files")
-      val (files, base) = pendingOf(last.map(_._2), cur)
-      val n = last.fold(0L)(_._1.last + 1)
-      publish(n, buildFrom(readFrom(files)),
-        if (base) n else last.fold(n)(_._3))
-      last = newest()
+    def settled(last: Newest): Boolean =
+      last.exists { case (_, rec, _) => curKeys.forall(rec.toSet) }
+
+    def serve(last: Newest): (Long, DataFrame) = {
+      val (gens, _, since) = last.get
+      (gens.last, segments(spark, root.toString, gens, since))
     }
-    val (gens, _, since) = last.get
-    (gens.last, segments(spark, root.toString, gens, since))
+
+    // A settled store is served without waiting; otherwise one caller
+    // per root in this JVM builds, and the callers waiting behind it
+    // find its generation settled and serve it.
+    val seen = newest()
+    if (settled(seen)) serve(seen)
+    else SingleFlight(root.toString) {
+      var last = newest()
+      var attempts = 0
+      while (!settled(last)) {
+        attempts += 1
+        if (attempts > 4)
+          throw new java.io.IOException(
+            s"ensure of $root failed to converge after $attempts attempts " +
+              "— committed manifests keep missing locally observed files")
+        val (files, base) = pendingOf(last.map(_._2), cur)
+        val n = last.fold(0L)(_._1.last + 1)
+        publish(n, buildFrom(readFrom(files)),
+          if (base) n else last.fold(n)(_._3))
+        last = newest()
+      }
+      serve(last)
+    }
   }
 
   /** Read an incremental root AT a pinned generation: the segment
@@ -393,7 +421,8 @@ object Materialize {
     * (parallel suites, bench + test, another JVM) never observe a
     * partially-written cache dir: either this caller's rename lands the
     * complete directory, or another caller's already did and this one
-    * serves it.
+    * serves it. Callers in one JVM build a store once ([[SingleFlight]]
+    * per destination): the others wait for that commit and serve it.
     */
   def ensureParquet(spark: SparkSession, prefix: String, tag: String,
                     df: => DataFrame,
@@ -423,29 +452,38 @@ object Materialize {
                                      bucketing: Option[BucketSpec] = None): DataFrame = {
     val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
     val done = new Path(dst, "_SUCCESS")
-    if (!fs.exists(done) && !Generations.commitOnce(fs, dst) { tmp =>
-          val write = DataSource(spark, "parquet",
-            partitionColumns = partitionCols, bucketSpec = bucketing,
-            options = Map("path" -> tmp.toString))
-            .planForWriting(SaveMode.ErrorIfExists, df.queryExecution.analyzed)
-          spark.sessionState.executePlan(write).assertCommandExecuted()
-        } && !fs.exists(done))
-      throw new java.io.IOException(
-        s"$dst exists without _SUCCESS and no writer committed it — " +
-          "refusing to serve a partial store (delete it to rebuild)")
     // a bucketed or partitioned write of no rows leaves no data file,
     // and no schema can be inferred from none: read such a store with
     // the frame's schema
-    val read =
-      if (fs.listStatus(dst).exists(f => !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))) ParquetRead(spark, dst.toString)
-      else spark.read.schema(df.schema).parquet(dst.toString)
-    bucketing.fold(read) { spec =>
-      val rel = read.queryExecution.analyzed.collectFirst {
-        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
-      }.get
-      spark.baseRelationToDataFrame(
-        rel.copy(bucketSpec = Some(spec))(rel.sparkSession))
+    def read(): DataFrame = {
+      val plain =
+        if (fs.listStatus(dst).exists(f => !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith("."))) ParquetRead(spark, dst.toString)
+        else spark.read.schema(df.schema).parquet(dst.toString)
+      bucketing.fold(plain) { spec =>
+        val rel = plain.queryExecution.analyzed.collectFirst {
+          case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+        }.get
+        spark.baseRelationToDataFrame(
+          rel.copy(bucketSpec = Some(spec))(rel.sparkSession))
+      }
+    }
+    // A committed store is served without waiting; otherwise one caller
+    // per `dst` in this JVM builds, and the callers waiting behind it
+    // serve its commit.
+    if (fs.exists(done)) read()
+    else SingleFlight(dst.toString) {
+      if (!fs.exists(done) && !Generations.commitOnce(fs, dst) { tmp =>
+            val write = DataSource(spark, "parquet",
+              partitionColumns = partitionCols, bucketSpec = bucketing,
+              options = Map("path" -> tmp.toString))
+              .planForWriting(SaveMode.ErrorIfExists, df.queryExecution.analyzed)
+            spark.sessionState.executePlan(write).assertCommandExecuted()
+          } && !fs.exists(done))
+        throw new java.io.IOException(
+          s"$dst exists without _SUCCESS and no writer committed it — " +
+            "refusing to serve a partial store (delete it to rebuild)")
+      read()
     }
   }
 }

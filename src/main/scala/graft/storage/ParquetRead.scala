@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.StructType
   * (path, length, mtime of every leaf file, listed before that read) and
   * the SQL conf it was inferred under, and while both still match the read
   * passes that schema to the reader. Growth, an overwrite or a conf change
-  * re-infers. Plans and rows are the ones the plain read gives; a missing
-  * path is read plainly, so it throws what the plain read throws.
+  * re-infers; readers racing on one new path set infer it once
+  * ([[SingleFlight]]). Plans and rows are the ones the plain read gives; a
+  * missing path is read plainly, so it throws what the plain read throws.
   *
   * The inventory comes from `FileSystem.listStatus` only. A
   * `LocatedFileStatus` (`listFiles`) asks the local file system for the
@@ -51,14 +52,15 @@ object ParquetRead {
       case None => spark.read.parquet(paths: _*)
       case Some(inv) =>
         val conf = spark.sessionState.conf.getAllConfs
-        memo.synchronized(Option(memo.get(paths)))
-          .filter(m => m.conf == conf && m.inventory == inv) match {
-          case Some(m) => spark.read.schema(m.schema).parquet(paths: _*)
-          case None =>
-            val df = spark.read.parquet(paths: _*)
-            memo.synchronized(memo.put(paths, Inferred(conf, inv, df.schema)))
-            df
-        }
+        def known = memo.synchronized(Option(memo.get(paths)))
+          .filter(m => m.conf == conf && m.inventory == inv)
+        def read(m: Inferred) = spark.read.schema(m.schema).parquet(paths: _*)
+        // concurrent first readers of one path set infer it once
+        known.fold(SingleFlight(paths)(known.fold {
+          val df = spark.read.parquet(paths: _*)
+          memo.synchronized(memo.put(paths, Inferred(conf, inv, df.schema)))
+          df
+        }(read)))(read)
     }
 
   /** (path, length, mtime) of every file under `paths`, directories

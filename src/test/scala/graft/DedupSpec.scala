@@ -863,26 +863,27 @@ class DedupSpec extends SparkSpec {
 
   test("near-dup clusters follow a landing under a live dir") {
     import org.apache.spark.sql.functions._
-    val t = TempCorpus.copyOf(spark, sfDir, "graft-clusters-grow", "documents")
-    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val before = labels(Dedup.nearDupClusters(t))
-    val rankedBefore = labels(Dedup.clusterRank(t))
-    assert(before.nonEmpty && rankedBefore.keySet == before.keySet)
-    // a near copy of a cluster keeper: its text with one word appended
-    val keeper = before.values.min
-    val newId = t.documents.agg(max(col("doc_id"))).head.getLong(0) + 1
-    TempCorpus.land(t, "documents", t.documents
-      .filter(col("doc_id") === keeper)
-      .withColumn("doc_id", lit(newId))
-      .withColumn("text", concat(col("text"), lit(" addendum")))
-      .withColumn("n_chars", length(col("text")).cast("long")))
-    val after = labels(Dedup.nearDupClusters(t))
-    assert(after != before, "clusters converged before the landing were served")
-    assert(after.get(newId).contains(keeper),
-      s"the landed near copy of $keeper is not in its cluster: ${after.get(newId)}")
-    assert(after - newId == before)
-    assert(labels(Dedup.clusterRank(t)).keySet == after.keySet)
+    TempCorpus.withCopy(spark, sfDir, "graft-clusters-grow", "documents") { t =>
+      def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val before = labels(Dedup.nearDupClusters(t))
+      val rankedBefore = labels(Dedup.clusterRank(t))
+      assert(before.nonEmpty && rankedBefore.keySet == before.keySet)
+      // a near copy of a cluster keeper: its text with one word appended
+      val keeper = before.values.min
+      val newId = t.documents.agg(max(col("doc_id"))).head.getLong(0) + 1
+      TempCorpus.land(t, "documents", t.documents
+        .filter(col("doc_id") === keeper)
+        .withColumn("doc_id", lit(newId))
+        .withColumn("text", concat(col("text"), lit(" addendum")))
+        .withColumn("n_chars", length(col("text")).cast("long")))
+      val after = labels(Dedup.nearDupClusters(t))
+      assert(after != before, "clusters converged before the landing were served")
+      assert(after.get(newId).contains(keeper),
+        s"the landed near copy of $keeper is not in its cluster: ${after.get(newId)}")
+      assert(after - newId == before)
+      assert(labels(Dedup.clusterRank(t)).keySet == after.keySet)
+    }
   }
 
   test("bucketed stores rebuilt after a landing equal a from-scratch build, growth and rebase alike") {
@@ -907,7 +908,7 @@ class DedupSpec extends SparkSpec {
         .sorted.toSeq)
     }
     def fromScratch(c: Tables): Seq[Seq[String]] =
-      storeRows(TempCorpus.copyOf(spark, c.dir, "graft-stores-fresh", "documents"))
+      TempCorpus.withCopy(spark, c.dir, "graft-stores-fresh", "documents")(storeRows)
     // near copies (a new shingle each) and exact copies (no keepers)
     def segment(c: Tables, from: Long, n: Int): org.apache.spark.sql.DataFrame = {
       val maxId = c.documents.agg(max(col("doc_id"))).head.getLong(0)
@@ -918,38 +919,39 @@ class DedupSpec extends SparkSpec {
         .withColumn("n_chars", length(col("text")).cast("long"))
         .union(picked.withColumn("doc_id", col("doc_id") + lit(2 * maxId + 2)))
     }
-    val t = TempCorpus.copyOf(spark, sfDir, "graft-stores-grow", "documents")
-    val before = storeRows(t)
-    def pending(): Seq[(Int, Boolean)] =
-      Seq(Dedup.ShinglesStore, Substring.WindowsStore).map { s =>
-        val (files, rebase) = Materialize.incrementalPending(t, s)
-        (files.size, rebase)
-      }
+    TempCorpus.withCopy(spark, sfDir, "graft-stores-grow", "documents") { t =>
+      val before = storeRows(t)
+      def pending(): Seq[(Int, Boolean)] =
+        Seq(Dedup.ShinglesStore, Substring.WindowsStore).map { s =>
+          val (files, rebase) = Materialize.incrementalPending(t, s)
+          (files.size, rebase)
+        }
 
-    // growth: one new part file, the incremental stores append it
-    TempCorpus.land(t, "documents", segment(t, 0L, 10))
-    assert(pending() == Seq((1, false), (1, false)), pending().toString)
-    val grown = storeRows(t)
-    assert(grown.zip(before).forall { case (g, b) => g.size > b.size },
-      "the landing added no store rows")
-    assert(grown == fromScratch(t), "grown stores differ from a fresh build")
+      // growth: one new part file, the incremental stores append it
+      TempCorpus.land(t, "documents", segment(t, 0L, 10))
+      assert(pending() == Seq((1, false), (1, false)), pending().toString)
+      val grown = storeRows(t)
+      assert(grown.zip(before).forall { case (g, b) => g.size > b.size },
+        "the landing added no store rows")
+      assert(grown == fromScratch(t), "grown stores differ from a fresh build")
 
-    // rewrite: a recorded part file's rows move into a new file next to
-    // a second segment, so the incremental stores rebase
-    val docsDir = new org.apache.hadoop.fs.Path(t.dir, "documents.parquet")
-    val fs = docsDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val victim = fs.listStatus(docsDir).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).minBy(_.getName)
-    val moved = spark.read.parquet(victim.toString).collect().toSeq
-    val seg2 = segment(t, 50L, 10).collect().toSeq
-    fs.delete(victim, false)
-    TempCorpus.land(t, "documents", spark.createDataFrame(
-      spark.sparkContext.parallelize(moved ++ seg2, 1), t.documents.schema))
-    assert(pending().forall(_._2), s"a rewrite did not rebase: ${pending()}")
-    val rebased = storeRows(t)
-    assert(rebased != grown)
-    assert(rebased == fromScratch(t), "rebased stores differ from a fresh build")
-    assert((keeperShingleDirs -- keepDirs0).isEmpty,
-      s"a keeper shingle store was built: ${keeperShingleDirs -- keepDirs0}")
+      // rewrite: a recorded part file's rows move into a new file next to
+      // a second segment, so the incremental stores rebase
+      val docsDir = new org.apache.hadoop.fs.Path(t.dir, "documents.parquet")
+      val fs = docsDir.getFileSystem(spark.sessionState.newHadoopConf())
+      val victim = fs.listStatus(docsDir).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).minBy(_.getName)
+      val moved = spark.read.parquet(victim.toString).collect().toSeq
+      val seg2 = segment(t, 50L, 10).collect().toSeq
+      fs.delete(victim, false)
+      TempCorpus.land(t, "documents", spark.createDataFrame(
+        spark.sparkContext.parallelize(moved ++ seg2, 1), t.documents.schema))
+      assert(pending().forall(_._2), s"a rewrite did not rebase: ${pending()}")
+      val rebased = storeRows(t)
+      assert(rebased != grown)
+      assert(rebased == fromScratch(t), "rebased stores differ from a fresh build")
+      assert((keeperShingleDirs -- keepDirs0).isEmpty,
+        s"a keeper shingle store was built: ${keeperShingleDirs -- keepDirs0}")
+    }
   }
 }
