@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.control.NonFatal
@@ -92,15 +93,43 @@ private[graft] object Generations {
   }
 
   /** Run `write` into a fresh temp dir beside `dst`, then `place` it. A
-    * throw from either deletes the temp dir.
+    * throw from either deletes the temp dir, after the write's jobs have
+    * no task left running ([[drained]]).
     */
   private def staged[A](fs: FileSystem, dst: Path)(write: Path => Unit)(
       place: Path => A): A = {
     val tmp = new Path(dst.getParent,
       s".${dst.getName}.inprogress-${java.util.UUID.randomUUID()}")
-    try { write(tmp); place(tmp) }
+    try { drained(write(tmp)); place(tmp) }
     catch { case NonFatal(e) => fs.delete(tmp, true); throw e }
   }
+
+  /** Runs `body` with its Spark jobs under a fresh job tag; when it
+    * throws, waits (at most a minute) until those jobs have ended and no
+    * task of theirs still runs, then rethrows. A failed job returns to its
+    * caller while its other tasks are still being killed, and a task
+    * still writing then recreates directories under a temp dir its caller
+    * has already deleted.
+    */
+  private def drained(body: => Unit): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(body) { spark =>
+        val sc = spark.sparkContext
+        val st = sc.statusTracker
+        val tag = s"graft-staged-${java.util.UUID.randomUUID()}"
+        // the job's status is final only once every earlier event of it,
+        // each task start included, has reached the status store
+        def running = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+          .exists(j => j.status == JobExecutionStatus.RUNNING ||
+            j.stageIds.iterator.flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0))
+        sc.addJobTag(tag)
+        try body
+        catch { case NonFatal(e) =>
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (running && System.nanoTime() < deadline) Thread.sleep(10)
+          throw e
+        } finally sc.removeJobTag(tag)
+      }
 
   /** Write `dst` once: `write` fills a temp dir, one exclusive rename
     * commits it. True iff this call committed `dst`; false when another

@@ -54,13 +54,13 @@ object ParquetRead {
         val conf = spark.sessionState.conf.getAllConfs
         def known = memo.synchronized(Option(memo.get(paths)))
           .filter(m => m.conf == conf && m.inventory == inv)
-        def read(m: Inferred) = spark.read.schema(m.schema).parquet(paths: _*)
+          .map(m => spark.read.schema(m.schema).parquet(paths: _*))
         // concurrent first readers of one path set infer it once
-        known.fold(SingleFlight(paths)(known.fold {
+        known.getOrElse(SingleFlight(paths)(known.getOrElse {
           val df = spark.read.parquet(paths: _*)
           memo.synchronized(memo.put(paths, Inferred(conf, inv, df.schema)))
           df
-        }(read)))(read)
+        }))
     }
 
   /** (path, length, mtime) of every file under `paths`, directories

@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, CyclicBarrier, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, CyclicBarrier, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import graft.dedup.Dedup
 import graft.pipeline.{CorpusClean, Intake}
@@ -22,7 +22,7 @@ class AdmitFanoutSpec extends SparkSpec {
   /** `bodies` run on one thread each, released together; their results. */
   private def together[A](bodies: (() => A)*): Seq[A] = {
     val start = new CyclicBarrier(bodies.size)
-    val out = bodies.map(_ => new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]())
+    val out = bodies.map(_ => new AtomicReference[Either[Throwable, A]]())
     val threads = bodies.zip(out).map { case (body, o) =>
       new Thread(() => o.set(try { start.await(); Right(body()) }
         catch { case e: Throwable => Left(e) }))
@@ -85,7 +85,7 @@ class AdmitFanoutSpec extends SparkSpec {
       val drained = new CountDownLatch(1)
       def groupOf(e: SparkListenerJobStart): String =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val markerJobs = ConcurrentHashMap.newKeySet[Int]()
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
           if (groupOf(e) == marker) markerJobs.add(e.jobId)
